@@ -16,7 +16,7 @@ job dying, matching the reference's drop-with-log behavior
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -146,8 +146,3 @@ def with_parsed_tx(df: DataFrame, raw_col: str = "raw_tx") -> DataFrame:
     parsed = df.withColumn("__parsed", parse_raw_tx_udf(F.col(raw_col)))
     keep = [c for c in df.columns]
     return parsed.select(*keep, "__parsed.*")
-
-
-def parsed_hash_col(raw_col: str = "raw_tx") -> Column:
-    """Just the tx hash from raw RLP (cheaper validation passes)."""
-    return parse_raw_tx_udf(F.col(raw_col))["hash"]

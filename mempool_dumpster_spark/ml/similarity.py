@@ -558,34 +558,15 @@ def _unit_centroids(dim: int, n_cells: int, seed: str) -> list[list[float]]:
     return out
 
 
-def _cell_structs(unit: Column, centroids: list[list[float]]) -> Column:
-    """array<struct<d: double, cell: int>> of (dot, cell-id) per centroid.
-    Struct ordering makes max/sort pick by dot first, cell id on ties —
-    deterministic cell assignment."""
-    return F.array(
-        *[
-            F.struct(
-                dot(unit, F.array(*[F.lit(x) for x in c])).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-
-
-def nearest_cell(unit: Column, centroids: list[list[float]]) -> Column:
-    return F.array_max(_cell_structs(unit, centroids))["cell"]
-
-
 def _probe_cells_udf(centroids: list[list[float]], top: int):
     """array<int> of the `top` nearest cell ids (best first), vectorized:
     one Arrow matmul against the centroid matrix replaces n_cells
-    interpreted `dot` folds per row. Tie-break mirrors the JVM struct
-    ordering in `_cell_structs` (equal dot → larger cell id first): the
-    column-reversed argsort makes numpy's stable sort prefer the higher
-    original cell index on exact ties. Cell assignment carries no
-    fp-parity obligation — a boundary flip moves a vector between cells
-    (an index/recall detail), the exact re-rank is unaffected."""
+    interpreted `dot` folds per row. Tie-break: equal dot → larger cell
+    id first; the column-reversed argsort makes numpy's stable sort
+    prefer the higher original cell index on exact ties. Cell assignment
+    carries no fp-parity obligation — a boundary flip moves a vector
+    between cells (an index/recall detail), the exact re-rank is
+    unaffected."""
     from pyspark.sql.functions import pandas_udf
 
     cmat = np.array(centroids)  # (n_cells, dim)
@@ -600,12 +581,6 @@ def _probe_cells_udf(centroids: list[list[float]], top: int):
         return pd.Series(list(cells.astype("int32")))
 
     return _probe
-
-
-def probe_cells(unit: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """The nprobe nearest cell ids, best first."""
-    ranked = F.reverse(F.array_sort(_cell_structs(unit, centroids)))
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
 
 
 def train_ivf_centroids(

@@ -138,27 +138,6 @@ def language_id(
     )
 
 
-def fingerprint_mink(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k_min: int = 5
-) -> DataFrame:
-    """Winnowing-style fingerprint: the k smallest shingle hashes per doc,
-    joined to one string. Rolling-hash equivalent with md5 as the hash;
-    map-side aggregable (array_sort + slice over collected mins)."""
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles(text_col)).alias("shingle"),
-    ).distinct()
-    return (
-        sh.select("doc_id", F.md5("shingle").alias("h"))
-        .groupBy("doc_id")
-        .agg(
-            F.concat_ws(
-                "|", F.slice(F.array_sort(F.collect_set("h")), 1, k_min)
-            ).alias("fingerprint")
-        )
-    )
-
-
 def with_gopher_stats(
     df: DataFrame, text_col: str = "text"
 ) -> DataFrame:

@@ -1,19 +1,21 @@
 """The analyzer — daily summary report (SURVEY.md §3.2; reference
 common/analyzer.go:53-213, cmd/analyze/main.go:46-140).
 
-`analyze()` computes every A6-A17 aggregate off one cached DataFrame;
-`render_report()` turns the small collected results into the markdown-style
+`analyze()` is the single-pass analyzer: like the reference's one loop over
+the day's transactions, it runs ONE grouped aggregate (`summary_groups`)
+and folds every A6-A14 statistic out of the few collected rows on the
+driver. `render_report()` and `sprint_summary()` turn the result into the
 summary text (driver-side, like the reference's Sprint())."""
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from mempool_dumpster_spark.functions.scalars import human_bytes
-from mempool_dumpster_spark.operators import aggregates as A
 from mempool_dumpster_spark.operators.joins import was_included_before_received
 
 
@@ -29,24 +31,94 @@ class AnalyzerResult:
     distinct: list
 
 
-def analyze(txs: DataFrame) -> AnalyzerResult:
-    """Runs the reference's single-pass analyzer as ~7 aggregates over one
-    cached input; excludes already-included-before-received rows up front
-    (reference common/analyzer.go:67-74)."""
-    t = txs.filter(~was_included_before_received()).persist()
-    try:
-        return AnalyzerResult(
-            n_unique=t.count(),
-            included=A.included_split(t).collect(),
-            by_txtype=A.count_by_txtype(t).collect(),
-            by_source=A.count_by_source(t).collect(),
-            source_inclusion=A.source_inclusion_split(t).collect(),
-            exclusive=A.exclusive_orderflow(t).collect(),
-            span=A.time_span(t).collect(),
-            distinct=A.distinct_sorted(t).collect(),
+def summary_groups(txs: DataFrame) -> DataFrame:
+    """The analyzer's one aggregate: rows not already included before they
+    were received (reference common/analyzer.go:67-74), grouped by
+    (included, txType, sorted sources) with count, raw bytes and first/last
+    timestamp. The group count is bounded by 2 × tx types × distinct source
+    SETS, never by input rows; `sort_array` makes first-seen order
+    irrelevant. Every aggregate is order-insensitive, so Catalyst drops a
+    sort under it (EliminateSorts) and the merge's pre-sort cache is read
+    directly."""
+    return (
+        txs.filter(~was_included_before_received())
+        .groupBy(
+            (F.col("includedAtBlockHeight") > 0).alias("included"),
+            F.col("txType"),
+            F.sort_array("sources").alias("sources"),
         )
-    finally:
-        t.unpersist()
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.coalesce(F.length("rawTx"), F.lit(0))).alias("bytes"),
+            F.min("timestamp").alias("first_ts"),
+            F.max("timestamp").alias("last_ts"),
+        )
+    )
+
+
+def _asc(key):
+    """Sort key for Spark's ascending order: nulls first."""
+    return tuple((v is not None, v) for v in key)
+
+
+def _rows(counts: Counter, names: tuple[str, ...]) -> list:
+    """Counter over key tuples → Rows ordered like `ORDER BY` the keys."""
+    return [
+        Row(**dict(zip(names, (*k, n))))
+        for k, n in sorted(counts.items(), key=lambda kv: _asc(kv[0]))
+    ]
+
+
+def analyze(txs: DataFrame) -> AnalyzerResult:
+    """Every AnalyzerResult field from one collected `summary_groups`
+    aggregate (reference common/analyzer.go:53-150): unique and included
+    counts (A6, A7), per-type counts and bytes (A8, A9), per-source and
+    source × included counts (A10, A11), single-source exclusive orderflow
+    (A12), the time span (A13) and the sorted distinct sources and types
+    (A14). Row field names and orders are those of the per-statistic
+    queries the fold replaces; no cache is taken."""
+    groups = summary_groups(txs).collect()
+    included, by_type, type_bytes = Counter(), Counter(), Counter()
+    by_source, source_inc, exclusive = Counter(), Counter(), Counter()
+    for g in groups:
+        inc, n = g["included"], g["n"]
+        included[(inc,)] += n
+        by_type[(g["txType"],)] += n
+        type_bytes[(g["txType"],)] += g["bytes"]
+        srcs = g["sources"] or []
+        for s in srcs:
+            by_source[(s,)] += n
+            source_inc[(s, inc)] += n
+        if len(srcs) == 1:
+            exclusive[(srcs[0], inc)] += n
+    firsts = [g["first_ts"] for g in groups if g["first_ts"] is not None]
+    lasts = [g["last_ts"] for g in groups if g["last_ts"] is not None]
+    first, last = min(firsts, default=None), max(lasts, default=None)
+    by_source_rows = _rows(by_source, ("source", "n"))
+    return AnalyzerResult(
+        n_unique=sum(included.values()),
+        included=_rows(included, ("included", "n")),
+        by_txtype=[
+            Row(txType=k[0], n=n, bytes=type_bytes[k])
+            for k, n in sorted(by_type.items(), key=lambda kv: _asc(kv[0]))
+        ],
+        by_source=by_source_rows,
+        source_inclusion=_rows(source_inc, ("source", "included", "n")),
+        exclusive=_rows(exclusive, ("source", "included", "n")),
+        span=[
+            Row(
+                first_ts=first,
+                last_ts=last,
+                duration_ms=None if first is None else last - first,
+            )
+        ],
+        distinct=[
+            Row(
+                sources=[r["source"] for r in by_source_rows],
+                tx_types=sorted(k[0] for k in by_type if k[0] is not None),
+            )
+        ],
+    )
 
 
 def _go_pct(a: int, b: int) -> str:

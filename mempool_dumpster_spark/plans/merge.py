@@ -401,12 +401,17 @@ def merge_transactions(
 
     stats: dict = {}
     if collect_stats:
+        # both parse counters in one aggregate over the persisted `parsed`
+        parse_failures, chainid_not_set = parsed.agg(
+            F.count_if(~F.col("parse_ok")),
+            F.count_if(
+                F.col("parse_ok") & (F.col("reason") == REASON_CHAINID_NOT_SET)
+            ),
+        ).first()
         stats = {
             "tx_rows_rejected": tx_read.rejects.count(),
-            "parse_failures": parsed.filter(~F.col("parse_ok")).count(),
-            "chainid_not_set": parsed.filter(
-                F.col("parse_ok") & (F.col("reason") == REASON_CHAINID_NOT_SET)
-            ).count(),
+            "parse_failures": parse_failures,
+            "chainid_not_set": chainid_not_set,
             "output_rows": final.count(),
         }
     cached = [pre_sort] + ([parsed] if collect_stats else [])

@@ -88,16 +88,6 @@ def read_pushdown(spark: SparkSession, url: str, query: str, **opts) -> DataFram
     return spark.read.format("jdbc").options(**jdbc_options(url, query, **opts)).load()
 
 
-def read_deduped_day(
-    spark: SparkSession, url: str, table: str, date_from: str, date_to: str, **opts
-) -> DataFrame:
-    """S8: JDBC scan with the ClickHouse-dialect dedup pushed down. Requires
-    the ClickHouse JDBC driver on the classpath."""
-    return read_pushdown(
-        spark, url, dedup_pushdown_query(table, date_from, date_to), **opts
-    )
-
-
 def clickhouse_stream_sink(
     df: DataFrame,
     url: str,

@@ -27,8 +27,10 @@ def fixture_day(tmp_path_factory):
     tx_c = make_tx(priv=0xCAFE, tx_type=1, nonce=3)  # blacklisted
     tx_d = make_tx(priv=0xD00D, tx_type=3, nonce=4)  # blob; included-before-received
     tx_e = make_tx(priv=0xE66, tx_type=2, nonce=5)  # no sourcelog entries
+    tx_f = make_tx(priv=0xF00, tx_type=2, chain_id=0, nonce=6)  # chainId not set
     h = {k: tx_hash_of(v) for k, v in
-         {"a": tx_a, "b": tx_b, "c": tx_c, "d": tx_d, "e": tx_e}.items()}
+         {"a": tx_a, "b": tx_b, "c": tx_c, "d": tx_d, "e": tx_e,
+          "f": tx_f}.items()}
 
     f1 = root / "txs_1.csv"
     f1.write_text(
@@ -37,6 +39,7 @@ def fixture_day(tmp_path_factory):
         f"{TS+300},{h['c']},{tx_c}\n"
         f"malformed line\n"
         f"{TS+400},{h['d']},{tx_d}\n"
+        f"{TS+450},{h['f']},{tx_f}\n"  # decodes, but the merge drops it
     )
     # duplicate of b with SMALLER timestamp in a zip archive + junk rlp row
     f2 = root / "txs_2.csv.zip"
@@ -130,6 +133,7 @@ def test_output_sorted_and_metadata(merged):
 def test_stats(merged):
     assert merged.stats["tx_rows_rejected"] == 1  # the malformed line
     assert merged.stats["parse_failures"] == 1  # 0xdeadbeef
+    assert merged.stats["chainid_not_set"] == 1  # f
     assert merged.stats["output_rows"] == 3
 
 
@@ -218,3 +222,46 @@ def test_title_source(spark):
     df = spark.createDataFrame([("bloxroute",), ("eden network",)], ["s"])
     got = [r[0] for r in df.select(title_source("s")).collect()]
     assert got == ["Bloxroute", "Eden Network"]
+
+
+def test_analyze_plan_invariants(spark, fixture_day, tmp_path):
+    """The single-pass analyzer stays single-pass: one aggregate over the
+    merge's pre-sort cache (no re-sort above it), at most 3 Spark jobs, and
+    no cache of its own. The merge is written first, as in the daily job,
+    so the jobs counted are the analyzer's alone."""
+    from mempool_dumpster_spark.operators.analyzer import summary_groups
+
+    sc = spark.sparkContext
+    result = merge_transactions(
+        spark,
+        tx_paths=fixture_day["tx_paths"],
+        sourcelog_paths=fixture_day["sl_paths"],
+        blacklist_paths=fixture_day["bl_paths"],
+    )
+    try:
+        write_merge_outputs(result, str(tmp_path / "out"))
+
+        # logical-plan nodes above the caches (InMemoryRelation is a leaf)
+        def names(node):
+            kids = node.children()
+            return [node.nodeName()] + [
+                n for i in range(kids.size()) for n in names(kids.apply(i))
+            ]
+
+        plan = summary_groups(result.transactions)._jdf.queryExecution()
+        nodes = names(plan.optimizedPlan())
+        assert "InMemoryRelation" in nodes
+        assert "Sort" not in nodes
+
+        persisted = sc._jsc.getPersistentRDDs().size()
+        sc.setJobGroup("analyze_invariants", "analyze over a written merge")
+        try:
+            res = analyze(result.transactions)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("analyze_invariants")
+        assert res.n_unique == 4  # no blocks: d is not dropped
+        assert len(jobs) <= 3
+        assert sc._jsc.getPersistentRDDs().size() == persisted
+    finally:
+        result.unpersist()

@@ -7,11 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mempool_dumpster_spark.operators.aggregates import (
-    count_by_source,
-    exclusive_orderflow,
-    included_split,
-)
+from mempool_dumpster_spark.operators.analyzer import analyze
 from mempool_dumpster_spark.operators.dedup import (
     dedup_keep_earliest,
     dedup_keep_earliest_row,
@@ -176,16 +172,20 @@ def test_inclusion_enrich_and_f3(spark):
 
 def test_analyzer_aggregates(spark):
     txs = spark.createDataFrame(
-        [("h1", ["a"], 1, 10), ("h2", ["a", "b"], 0, 20), ("h3", ["b"], 5, 30)],
-        "hash string, sources array<string>, includedAtBlockHeight long, timestamp long",
+        [
+            ("h1", ["a"], 1, 10, 0, 2, None),
+            ("h2", ["a", "b"], 0, 20, 0, 2, None),
+            ("h3", ["b"], 5, 30, 0, 2, None),
+        ],
+        "hash string, sources array<string>, includedAtBlockHeight long, "
+        "timestamp long, inclusionDelayMs long, txType int, rawTx binary",
     )
-    inc = {r["included"]: r["n"] for r in included_split(txs).collect()}
+    res = analyze(txs)
+    inc = {r["included"]: r["n"] for r in res.included}
     assert inc == {True: 2, False: 1}
-    per_src = {r["source"]: r["n"] for r in count_by_source(txs).collect()}
+    per_src = {r["source"]: r["n"] for r in res.by_source}
     assert per_src == {"a": 2, "b": 2}
-    excl = {
-        (r["source"], r["included"]): r["n"] for r in exclusive_orderflow(txs).collect()
-    }
+    excl = {(r["source"], r["included"]): r["n"] for r in res.exclusive}
     assert excl == {("a", True): 1, ("b", True): 1}
 
 
