@@ -861,9 +861,6 @@ PRETRAINED_SERVE_RATIO_MIN_SEC = 3.0
 #:     enough that a 2.5× regression would have passed its gate)
 #:   q1_pricing_summary: quiet readings 0.458/0.464/0.531 →
 #:     max 0.531 × 1.6 = 0.85 (was 0.96)
-#: The sf1: entries were calibrated r17 end-of-round (quiet runs, probe
-#: chain ≤1.1 at both edges of each bracket; readings recorded in
-#: OPTIMIZATION_r17.md).
 REF_QUERY_CEILING_SEC: dict[str, float] = {
     "q1_pricing_summary": 0.85,
     "q3_shipping_priority": 1.16,

@@ -33,6 +33,7 @@ DECIMAL-exact Lloyd — so indexes are bit-stable across partitionings):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 
@@ -853,24 +854,6 @@ def mmr_rerank(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    # r16 construction form: the unrolled stages are GENERATED AS ONE SQL
-    # string and parsed JVM-side in a single spark.sql call — the
-    # DataFrame-op form cost ~0.4 s of py4j round trips per invocation at
-    # k=3 (measured; Θ(k²) joins, each several driver round trips). The
-    # CTE tree below is a verbatim port: same join keys, same <>-filters,
-    # same integer score arithmetic, same (score DESC, neighbor_id)
-    # row_number tie discipline — greedy-parity stays pinned for k ≤ 8 in
-    # tests/test_properties.py.
-    from mempool_dumpster_spark.functions.views import (
-        drop_views,
-        register_temp_view,
-    )
-
-    spark = pool.sparkSession
-    # per-call unique view names (r17, r16 advice): fixed names raced
-    # under concurrent construction and clobbered same-named caller views
-    pool_v = register_temp_view(pool, "__mmr_rr_pool")
-    pair_v = register_temp_view(pair, "__mmr_rr_pair")
     # Integer weights are the contract (exact BIGINT score ordering; see
     # docstring). Validate instead of truncating (r16 advice): the old
     # int() cast silently turned an out-of-annotation 0.7/0.3 caller
@@ -886,59 +869,42 @@ def mmr_rerank(
                 "e.g. 0.7/0.3 -> 7/3"
             )
     rw, dw = int(relevance_weight), int(diversity_weight)
-    ctes = [
-        f"""s1 AS (
-          SELECT query_id, neighbor_id AS p1, {rw} * s_bp AS score1
-          FROM {pool_v} WHERE rk = 1
-        )""",
-        "acc1 AS (SELECT query_id, p1 FROM s1)",
-    ]
-    pick_selects = [
-        "SELECT query_id, CAST(1 AS BIGINT) AS pick, p1 AS neighbor_id, "
-        "score1 AS score_bp FROM s1"
-    ]
-    for i in range(2, k + 1):
-        prev_ps = [f"a{i}.p{j}" for j in range(1, i)]
-        neq = " AND ".join(f"p.neighbor_id <> {pj}" for pj in prev_ps)
-        pair_joins = "\n".join(
-            f"JOIN {pair_v} pr{j} ON pr{j}.query_id = p.query_id "
-            f"AND pr{j}.a = p.neighbor_id AND pr{j}.b = a{i}.p{j}"
-            for j in range(1, i)
-        )
-        penalty = (
-            "greatest(" + ", ".join(f"pr{j}.ps_bp" for j in range(1, i)) + ")"
-            if i > 2
-            else "pr1.ps_bp"
-        )
-        carry = ", ".join(prev_ps)
-        ctes.append(f"""c{i} AS (
-          SELECT p.query_id, p.neighbor_id, {carry},
-                 {rw} * p.s_bp - {dw} * {penalty} AS score
-          FROM {pool_v} p
-          JOIN acc{i - 1} a{i} ON a{i}.query_id = p.query_id
-          {pair_joins}
-          WHERE {neq}
-        )""")
-        ctes.append(f"""s{i} AS (
-          SELECT * FROM (
-            SELECT *, row_number() OVER (
-              PARTITION BY query_id ORDER BY score DESC, neighbor_id
-            ) AS __rk FROM c{i}
-          ) WHERE __rk = 1
-        )""")
-        ctes.append(
-            f"acc{i} AS (SELECT query_id, {', '.join(f'p{j}' for j in range(1, i))}, "
-            f"neighbor_id AS p{i} FROM s{i})"
-        )
-        pick_selects.append(
-            f"SELECT query_id, CAST({i} AS BIGINT) AS pick, neighbor_id, "
-            f"score AS score_bp FROM s{i}"
-        )
-    sql = (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + "\nUNION ALL\n".join(pick_selects)
+    # Construction form: each stage is alias-joins plus string
+    # expressions on the `pool`/`pair` frames themselves, so a caller's
+    # .cache() on either survives into the plan (a temp view over them
+    # would uncache them when dropped). Construct + analyze over
+    # emb_mmr_topk's sf0.01 pool, 4 vCPU, median of 5: 0.29 s at k=3,
+    # 3.6 s at k=8; JVM analysis of the Θ(k²) joins dominates, not py4j.
+    s = pool.where("rk = 1").selectExpr(
+        "query_id", "neighbor_id", f"{rw} * s_bp AS score"
     )
-    return drop_views(spark.sql(sql), pool_v, pair_v)
+    picks = []
+    for i in range(1, k + 1):
+        prev = [f"p{j}" for j in range(1, i)]
+        if prev:
+            c = pool.alias("p").join(acc.alias("a"), F.expr("a.query_id = p.query_id"))
+            for j in range(1, i):
+                c = c.join(pair.alias(f"pr{j}"), F.expr(
+                    f"pr{j}.query_id = p.query_id AND pr{j}.a = p.neighbor_id "
+                    f"AND pr{j}.b = a.p{j}"
+                ))
+            penalty = ", ".join(f"pr{j}.ps_bp" for j in range(1, i))
+            if i > 2:
+                penalty = f"greatest({penalty})"
+            s = (
+                c.where(" AND ".join(f"p.neighbor_id <> a.{pj}" for pj in prev))
+                .selectExpr(
+                    "p.query_id", "p.neighbor_id", *prev,
+                    f"{rw} * p.s_bp - {dw} * {penalty} AS score",
+                )
+                .selectExpr("*", "row_number() OVER (PARTITION BY query_id"
+                                 " ORDER BY score DESC, neighbor_id) AS __rk")
+                .where("__rk = 1")
+            )
+        acc = s.selectExpr("query_id", *prev, f"neighbor_id AS p{i}")
+        picks.append(s.selectExpr("query_id", f"CAST({i} AS BIGINT) AS pick",
+                                  "neighbor_id", "score AS score_bp"))
+    return functools.reduce(DataFrame.unionAll, picks)
 
 
 # --- product quantization (IVF-PQ's compression half) -----------------------

@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mempool_dumpster_spark.functions.views import drop_views, register_temp_view
 from mempool_dumpster_spark.ml.dedup import duplicate_components, exact_dedup
 from mempool_dumpster_spark.ml.similarity import ivf_topk, lsh_bucketed_topk
 from mempool_dumpster_spark.ml.text import DEFAULT_LANG_PROFILES, language_id
@@ -1751,23 +1750,22 @@ def docs_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir, ["embeddings"])
-    # r16 construction form: units/pool/pair are three spark.sql calls
-    # instead of ~150 py4j Column round-trips (~0.9 s of pure driver
-    # plan-construction per invocation, measured — the HOF unit/dot
-    # lambdas and the window/join chain each cost several round trips).
-    # The expressions are verbatim ports of the previous Column forms:
-    # unit = emb/nrm component-wise with the same sequential-fold dot, so
-    # every sim_r/s_bp/ps_bp value is bit-identical. pool and pair stay
-    # CACHED: the unrolled MMR stages reference pair i-1 times at pick i
-    # and each reference would otherwise re-derive the pool self-join +
-    # two unit joins + dot products (mmr_rerank docstring's "prefer
-    # caching pool/pair" advice; both frames are |Q|·m²-bounded, never
-    # corpus-sized — measured 2.04 → 1.35 s at sf0.1/local[32]).
-    # Cache contract (r16 verdict #6): these within-query caches are not
-    # unpersisted here — the returned frame references them. Long-running
-    # sessions calling this repeatedly reuse the SAME CacheManager entry
-    # (plan-identical), so entries do not accumulate; clearCache()
-    # releases them (bench.py clears between timed runs).
+    # Construction form: `units` is one spark.sql over the base table
+    # and pool/pair are alias-joins with string expressions on the frames
+    # themselves, a few dozen py4j round trips instead of the ~150 of a
+    # Column form (~0.9 s of plan construction, measured r16). The expressions
+    # are verbatim ports of the Column forms: unit = emb/nrm
+    # component-wise with the same sequential-fold dot, so every
+    # sim_r/s_bp/ps_bp value is bit-identical. pool and pair stay CACHED:
+    # the unrolled MMR stages reference pair i-1 times at pick i and each
+    # reference would otherwise re-derive the pool self-join + two unit
+    # joins + dot products; both frames are |Q|·m²-bounded, never
+    # corpus-sized. These within-query caches are never named in the
+    # session catalog (dropping a temp view uncaches its plan) nor
+    # unpersisted here; tests/test_plans.py pins them in the optimized
+    # plan. Repeated calls reuse the SAME CacheManager entries
+    # (plan-identical); clearCache() releases them (bench.py clears
+    # between timed runs).
     dot_sql = (
         "aggregate(zip_with({u}, {v}, (x, y) -> x * y), "
         "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
@@ -1781,39 +1779,41 @@ def emb_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
               FROM embeddings)
       )
     """).cache()
-    units_v = register_temp_view(units, "__mmr_units")
-    pool = spark.sql(f"""
-      SELECT query_id, neighbor_id,
-             CAST(round(sim_r * 10000) AS BIGINT) AS s_bp, rk
-      FROM (
-        SELECT query_id, neighbor_id, sim_r,
-               row_number() OVER (
-                 PARTITION BY query_id ORDER BY sim_r DESC, neighbor_id
-               ) AS rk
-        FROM (
-          SELECT /*+ BROADCAST(q) */ q.vec_id AS query_id,
-                 c.vec_id AS neighbor_id,
-                 round({dot_sql.format(u="q.unit", v="c.unit")}, 4) AS sim_r
-          FROM {units_v} c
-          JOIN (SELECT * FROM {units_v} WHERE vec_id < 5) q
-            ON c.vec_id <> q.vec_id
+    q = units.where("vec_id < 5").alias("q")
+    pool = (
+        units.alias("c")
+        .join(F.broadcast(q), F.expr("c.vec_id <> q.vec_id"))
+        .selectExpr(
+            "q.vec_id AS query_id", "c.vec_id AS neighbor_id",
+            f"round({dot_sql.format(u='q.unit', v='c.unit')}, 4) AS sim_r",
         )
-      ) WHERE rk <= 10
-    """).cache()
-    pool_v = register_temp_view(pool, "__mmr_pool")
-    pair = spark.sql(f"""
-      SELECT p1.query_id, p1.neighbor_id AS a, p2.neighbor_id AS b,
-             CAST(round(round({dot_sql.format(u="ua.unit", v="ub.unit")}, 4)
-                        * 10000) AS BIGINT) AS ps_bp
-      FROM {pool_v} p1
-      JOIN {pool_v} p2 ON p2.query_id = p1.query_id
-                      AND p2.neighbor_id <> p1.neighbor_id
-      JOIN {units_v} ua ON ua.vec_id = p1.neighbor_id
-      JOIN {units_v} ub ON ub.vec_id = p2.neighbor_id
-    """).cache()
+        .selectExpr(
+            "*", "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY sim_r DESC, neighbor_id) AS rk",
+        )
+        .where("rk <= 10")
+        .selectExpr(
+            "query_id", "neighbor_id",
+            "CAST(round(sim_r * 10000) AS BIGINT) AS s_bp", "rk",
+        )
+        .cache()
+    )
+    ps = dot_sql.format(u="ua.unit", v="ub.unit")
+    pair = (
+        pool.alias("p1")
+        .join(pool.alias("p2"), F.expr(
+            "p2.query_id = p1.query_id AND p2.neighbor_id <> p1.neighbor_id"))
+        .join(units.alias("ua"), F.expr("ua.vec_id = p1.neighbor_id"))
+        .join(units.alias("ub"), F.expr("ub.vec_id = p2.neighbor_id"))
+        .selectExpr(
+            "p1.query_id", "p1.neighbor_id AS a", "p2.neighbor_id AS b",
+            f"CAST(round(round({ps}, 4) * 10000) AS BIGINT) AS ps_bp",
+        )
+        .cache()
+    )
     from mempool_dumpster_spark.ml.similarity import mmr_rerank
 
-    return drop_views(mmr_rerank(pool, pair, k=3), units_v, pool_v)
+    return mmr_rerank(pool, pair, k=3)
 
 
 @register(

@@ -18,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mempool_dumpster_spark.functions.views import drop_views, register_temp_view
 from mempool_dumpster_spark.ml.similarity import cosine_near_pairs
 from mempool_dumpster_spark.plans.registry import register
 from mempool_dumpster_spark.plans.tables import load_tables, scan_spread_hint
@@ -208,6 +207,24 @@ def docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _shared_band_pairs(sig: DataFrame, n_bands: int, n_col: str) -> DataFrame:
+    """(doc_a, doc_b, n_col) for doc pairs whose min-hash columns m0..m{n-1}
+    agree in at least 2 bands (r=1): a `stack` band spread self-joined on
+    (band, key), so the shuffle is ∝ docs × bands, never docs²."""
+    stack_args = ", ".join(f"{i}, m{i}" for i in range(n_bands))
+    bands = sig.selectExpr(
+        "doc_id", f"stack({n_bands}, {stack_args}) AS (band, key)"
+    )
+    return (
+        bands.alias("a")
+        .join(bands.alias("b"),
+              F.expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
+        .groupBy(F.expr("a.doc_id AS doc_a"), F.expr("b.doc_id AS doc_b"))
+        .agg(F.expr(f"count(*) AS {n_col}"))
+        .where(f"{n_col} >= 2")
+    )
+
+
 @register(
     "docs_ngram_jaccard",
     oracle=f"""
@@ -269,14 +286,12 @@ def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (subexpression-elimination bug over NamedLambdaVariable hash exprs —
     # observed on Spark 4.1: all 8 "different" band mins came back equal).
     #
-    # r16 construction form: the whole plan is built as TWO spark.sql
-    # calls instead of ~500 py4j Column round-trips — the 32 min-hash
-    # aggregates plus the band/verify joins cost 0.94 s of DRIVER time
-    # per invocation to construct through py4j (measured; Catalyst
-    # analysis+optimization of the same tree is 0.04 s). Parsing the
-    # identical expressions JVM-side drops construction to ~0.03 s. The
-    # optimized plan is the same shape: the band explode is `stack`
-    # (one Generate, same topology as the explode-of-structs form).
+    # Construction form: the `arrs` stage is ONE spark.sql over the base
+    # table instead of ~500 py4j Column round-trips (the 32 min-hash
+    # aggregates cost 0.94 s of plan construction per invocation through py4j,
+    # measured r16). The band/verify joins are string expressions on the
+    # `arrs` frame itself — a dozen round trips. The band explode is
+    # `stack` (one Generate, same topology as the explode-of-structs form).
     n_bands = 32  # see the registry doc: the exactness-vs-scale knob
     par = spark.sparkContext.defaultParallelism
     mins = ", ".join(
@@ -293,16 +308,14 @@ def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the post-aggregate size(shs) > 0 guard, which runs once per DOC.
     # Measured 0.455 → 0.332 s on the arrs stage, byte-identical rows.
     #
-    # Cache contract (r16 verdict #6): the .cache() below is a
-    # WITHIN-QUERY intermediate — both band aliases and the two verify
-    # joins reference `arrs`, which would otherwise recompute the whole
-    # shingle pipeline 4×. It is never unpersisted by this function
-    # (the returned frame still references it); callers that invoke the
-    # query repeatedly in one long session should spark.catalog
-    # .clearCache() between invocations (bench.py does) or unpersist via
-    # the catalog — each invocation's entry is bounded by docs × 8
-    # hashes, and CacheManager dedups identical plans, so repeated calls
-    # reuse one entry rather than accumulating.
+    # The .cache() below is a WITHIN-QUERY intermediate: both band
+    # aliases and the two verify joins reference the `arrs` frame, which
+    # would otherwise recompute the whole shingle pipeline 4×. It is never
+    # named in the session catalog (dropping a temp view uncaches its
+    # plan) nor unpersisted here; tests/test_plans.py pins its
+    # InMemoryRelation in the optimized plan. CacheManager dedups
+    # identical plans, so repeated calls reuse one entry; clearCache()
+    # releases it (bench.py clears between timed runs).
     arrs = spark.sql(f"""
       SELECT doc_id, shs, CAST(size(shs) AS BIGINT) AS n_sh, {mcols}
       FROM (
@@ -325,31 +338,18 @@ def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY doc_id
       ) WHERE size(shs) > 0
     """).cache()
-    arrs_v = register_temp_view(arrs, "__jac_arrs")
-    stack_args = ", ".join(f"{i}, m{i}" for i in range(n_bands))
-    bands_sql = (
-        f"SELECT doc_id, stack({n_bands}, {stack_args}) AS (band, key) "
-        f"FROM {arrs_v}"
+    return (
+        _shared_band_pairs(arrs, n_bands, "nb_shared")
+        .join(arrs.alias("sa"), F.expr("sa.doc_id = doc_a"))
+        .join(arrs.alias("sb"), F.expr("sb.doc_id = doc_b"))
+        .selectExpr(
+            "doc_a", "doc_b",
+            "CAST(size(array_intersect(sa.shs, sb.shs)) AS DOUBLE)"
+            " / (sa.n_sh + sb.n_sh - size(array_intersect(sa.shs, sb.shs)))"
+            " AS jaccard",
+        )
+        .where("jaccard >= 0.5")
     )
-    return drop_views(spark.sql(f"""
-      SELECT doc_a, doc_b, jaccard
-      FROM (
-        SELECT cand.doc_a, cand.doc_b,
-               CAST(size(array_intersect(sa.shs, sb.shs)) AS DOUBLE)
-                 / (sa.n_sh + sb.n_sh - size(array_intersect(sa.shs, sb.shs)))
-                 AS jaccard
-        FROM (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS nb_shared
-          FROM ({bands_sql}) a
-          JOIN ({bands_sql}) b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-          HAVING count(*) >= 2
-        ) cand
-        JOIN {arrs_v} sa ON sa.doc_id = cand.doc_a
-        JOIN {arrs_v} sb ON sb.doc_id = cand.doc_b
-      ) WHERE jaccard >= 0.5
-    """), arrs_v)
 
 
 def _minhash_cols(n_hashes: int = 8) -> list:
@@ -405,9 +405,10 @@ def docs_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions, and the only shuffle moves 8 hashes per doc. The band
     # spread is one `stack` Generate instead of an 8-way union: the union
     # re-evaluates the signature aggregation once per branch.
-    # r16 construction form: two spark.sql calls instead of ~250 py4j
-    # Column round-trips (0.45 s of driver time per invocation, measured;
-    # same optimized plan).
+    # Construction form: `sig` is one spark.sql over the base table
+    # instead of ~250 py4j Column round-trips (0.45 s of construction per
+    # invocation, measured r16); the band self-join is string expressions
+    # on the cached `sig` frame itself, so its cache reaches the plan.
     par = spark.sparkContext.defaultParallelism
     mins = ", ".join(
         f"min(md5(concat('{i}:', shingle))) AS m{i}" for i in range(8)
@@ -437,19 +438,7 @@ def docs_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
       GROUP BY doc_id
     """).cache()
-    sig_v = register_temp_view(sig, "__mh_sig")
-    stack_args = ", ".join(f"{i}, m{i}" for i in range(8))
-    bands_sql = (
-        f"SELECT doc_id, stack(8, {stack_args}) AS (band, key) FROM {sig_v}"
-    )
-    return drop_views(spark.sql(f"""
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared_bands
-      FROM ({bands_sql}) a
-      JOIN ({bands_sql}) b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-      HAVING count(*) >= 2
-    """), sig_v)
+    return _shared_band_pairs(sig, 8, "n_shared_bands")
 
 
 def _simhash_bit_exprs_spark() -> Column:

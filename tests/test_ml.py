@@ -73,6 +73,20 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert (0, 3) not in got
 
 
+def test_minhash_signatures_keeps_caller_cache(spark, docs):
+    """A caller's cached shingle frame is still cached after building its
+    signatures: no temp view is registered over it and dropped (dropping
+    a temp view uncaches its plan)."""
+    sh = shingle_sets(docs).cache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    try:
+        assert cache.lookupCachedData(sh._jdf).isDefined()
+        minhash_signatures(sh, n_hashes=16)
+        assert cache.lookupCachedData(sh._jdf).isDefined()
+    finally:
+        sh.unpersist()
+
+
 def test_jaccard_with_candidate_pushdown(spark, docs):
     sh = shingle_sets(docs)
     cand = spark.createDataFrame([(0, 1), (0, 3)], "doc_a long, doc_b long")

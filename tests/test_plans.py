@@ -480,24 +480,69 @@ def test_load_tables_memo_is_per_session(spark):
     assert spark.sql("SELECT count(*) FROM events").first()[0] > 0
 
 
-def test_register_temp_view_unique_and_dropped(spark):
-    """Per-call view names never collide and drop_views releases them:
-    two registrations of the same stem coexist, and after drop_views the
-    names are gone from the catalog while the result stays usable."""
-    from mempool_dumpster_spark.functions.views import (
-        drop_views,
-        register_temp_view,
-    )
+#: queries whose plans reference a within-query .cache() more than once
+CACHED_SUBTREE_QUERIES = [
+    "docs_minhash_lsh_pairs",
+    "docs_ngram_jaccard",
+    "emb_mmr_topk",
+]
 
-    a = spark.range(3).withColumnRenamed("id", "v")
-    b = spark.range(5).withColumnRenamed("id", "v")
-    va = register_temp_view(a, "__vt_stem")
-    vb = register_temp_view(b, "__vt_stem")
-    assert va != vb
-    out = spark.sql(f"SELECT (SELECT count(*) FROM {va}) + "
-                    f"(SELECT count(*) FROM {vb}) AS n")
-    out = drop_views(out, va, vb)
-    names = {t.name for t in spark.catalog.listTables()}
-    assert va not in names and vb not in names
-    # plan was resolved before the drop, so execution still works
-    assert out.first()["n"] == 8
+
+@pytest.mark.parametrize("name", CACHED_SUBTREE_QUERIES)
+def test_within_query_caches_survive_construction(spark, name):
+    """The cached intermediate frame must still be cached when the query
+    runs: its optimized plan reads an InMemoryRelation. Routing the frame
+    through a temp view and dropping the view afterwards uncaches it and
+    leaves zero, so every reference recomputes the subtree."""
+    from mempool_dumpster_spark.plans.registry import all_queries
+
+    df = all_queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("InMemoryRelation") >= 1, f"{name} lost its cache"
+
+
+def _build_cached_subtree_users(s):
+    """Construct every function that references an intermediate frame more
+    than once: the three cached-subtree queries (emb_mmr_topk builds
+    through mmr_rerank) and minhash_signatures."""
+    from mempool_dumpster_spark.ml.dedup import minhash_signatures, shingle_sets
+    from mempool_dumpster_spark.ml.similarity import mmr_rerank
+    from mempool_dumpster_spark.plans.registry import all_queries
+    from mempool_dumpster_spark.plans.tables import load_tables
+
+    docs = load_tables(s, SF_DIR, ["documents"])["documents"]
+    pool = s.createDataFrame(
+        [(1, 10, 900, 1), (1, 11, 800, 2)],
+        "query_id long, neighbor_id long, s_bp long, rk int",
+    )
+    pair = s.createDataFrame(
+        [(1, 10, 11, 500), (1, 11, 10, 500)],
+        "query_id long, a long, b long, ps_bp long",
+    )
+    return [
+        *(all_queries()[q](s, SF_DIR) for q in CACHED_SUBTREE_QUERIES),
+        mmr_rerank(pool, pair, k=2),
+        minhash_signatures(shingle_sets(docs)),
+    ]
+
+
+def test_query_construction_leaves_catalog_unchanged(spark):
+    """Building the cached-subtree users registers no name in the session
+    catalog, in the session and in a newSession() sibling (each with its
+    own temp-view catalog), and leaves a caller's own temp views that
+    share an intermediate's name bound to the caller's data."""
+    from mempool_dumpster_spark.plans.tables import load_tables
+
+    spark.range(7).createOrReplaceTempView("__mmr_rr_pool")
+    sibling = spark.newSession()
+    try:
+        for s in (spark, sibling):
+            load_tables(s, SF_DIR, ["documents", "embeddings"])
+            before = {t.name for t in s.catalog.listTables()}
+            built = _build_cached_subtree_users(s)
+            assert {t.name for t in s.catalog.listTables()} == before
+        # the plans built in the sibling still run
+        assert built[-2].count() == 2 and built[-1].count() > 0
+        assert spark.table("__mmr_rr_pool").count() == 7
+    finally:
+        spark.catalog.dropTempView("__mmr_rr_pool")
