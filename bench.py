@@ -72,6 +72,19 @@ def _median(xs: list[float]) -> float:
     return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2.0
 
 
+def _dispersion(runs: list[float]) -> tuple[float, dict[str, float]]:
+    """(median, {min, median, max, n}) of SORTED per-query walls, rounded
+    to ms. The median is runs[len // 2], the upper middle on even counts
+    — the rule every committed headline was read with."""
+    med = round(runs[len(runs) // 2], 3)
+    return med, {
+        "min": round(runs[0], 3),
+        "median": med,
+        "max": round(runs[-1], 3),
+        "n": len(runs),
+    }
+
+
 def _bench_merge(spark, n: int | None = None, n_runs: int = 4) -> dict:
     """Time the engine's signature operator — the full merge pipeline over a
     synthetic day of collector CSVs (dedup → blacklist → RLP/ECDSA parse UDF →
@@ -675,20 +688,12 @@ def _cpu_probe() -> dict:
     quiet. The field rides along for forensics so a polluted artifact
     is identifiable even when the CPU probes read parity."""
     import hashlib
-    import threading
 
     import numpy as np
 
     buf = b"\x00" * (1 << 20)
     md5_runs, mm_runs, mt_runs = [], [], []
     mat = np.arange(512 * 512, dtype="float64").reshape(512, 512) / 1e6
-    n_thr = min(32, os.cpu_count() or 8)
-
-    def _hash_mb(n_mb: int) -> None:
-        h = hashlib.md5()
-        for _ in range(n_mb):
-            h.update(buf)
-
     for _ in range(3):
         t0 = time.time()
         h = hashlib.md5()
@@ -700,33 +705,54 @@ def _cpu_probe() -> dict:
         for _ in range(8):
             acc += float((mat @ mat)[0, 0])  # fresh operands — no overflow
         mm_runs.append(time.time() - t0)
-        threads = [
-            threading.Thread(target=_hash_mb, args=(48,)) for _ in range(n_thr)
-        ]
-        t0 = time.time()
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        mt_runs.append(time.time() - t0)
+        mt_runs.append(_md5_mt_sec())
     return {
         "md5_192mb_sec": round(sorted(md5_runs)[1], 3),
         "matmul_512_x8_sec": round(sorted(mm_runs)[1], 3),
         "md5_mt_48mb_sec": round(sorted(mt_runs)[1], 3),
-        "mt_threads": n_thr,
+        "mt_threads": MT_THREADS,
         "alloc_touch_256mb_sec": _alloc_touch_probe(),
     }
 
 
+MT_THREADS = min(32, os.cpu_count() or 8)
+
+
+def _md5_mt_sec() -> float:
+    """Wall seconds for MT_THREADS threads each hashing 48 MB with md5 —
+    the multi-core CPU probe. hashlib releases the GIL on large
+    updates, so the threads run in parallel."""
+    import hashlib
+    import threading
+
+    buf = b"\x00" * (1 << 20)
+
+    def _hash_48mb() -> None:
+        h = hashlib.md5()
+        for _ in range(48):
+            h.update(buf)
+
+    threads = [threading.Thread(target=_hash_48mb) for _ in range(MT_THREADS)]
+    t0 = time.time()
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    return time.time() - t0
+
+
 def _alloc_touch_probe(n_mb: int = 256) -> float:
     """First-touch allocation probe (r17, recorded-only — see _cpu_probe
-    docstring): allocate n_mb and dirty one byte per 4 KiB page, timing
-    the page-fault path the CPU probes never exercise. Quiet box:
-    ~0.10-0.15 s at 256 MB; during a host-memory-pressure wave: 10 s+."""
+    docstring): times allocating n_mb plus its full zero-fill
+    (`bytearray(n)` memsets the buffer, so every page is faulted in),
+    then one write per 4 KiB page — the page-fault path the CPU probes
+    never exercise. Quiet box: ~0.10-0.15 s at 256 MB; during a
+    host-memory-pressure wave: 10 s+."""
     t0 = time.time()
     b = bytearray(n_mb << 20)
     step = 4096
-    b[::step] = bytes(len(b[::step]))
+    n_pages = len(b) // step
+    b[::step] = bytes(n_pages)
     return round(time.time() - t0, 3)
 
 
@@ -960,33 +986,10 @@ def _section_probe(settle_sec: float = 2.0) -> dict:
     persists across the gap. The min is therefore an estimator of
     PERSISTENT contention, which is the only kind the gate logic should
     relax or exclude on; both raw snapshots ride along for forensics."""
-    import hashlib
-    import threading
-
-    buf = b"\x00" * (1 << 20)
-    n_thr = min(32, os.cpu_count() or 8)
-
-    def _hash_mb(n_mb: int) -> None:
-        h = hashlib.md5()
-        for _ in range(n_mb):
-            h.update(buf)
-
-    def _one() -> float:
-        threads = [
-            threading.Thread(target=_hash_mb, args=(48,))
-            for _ in range(n_thr)
-        ]
-        t0 = time.time()
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        return time.time() - t0
-
     time.sleep(settle_sec)
-    s1 = _one()
+    s1 = _md5_mt_sec()
     time.sleep(3.0)
-    s2 = _one()
+    s2 = _md5_mt_sec()
     sec = min(s1, s2)
     return {
         "md5_mt_48mb_sec": round(sec, 3),
@@ -1269,6 +1272,8 @@ def main() -> None:
     env: dict = {"load_avg_start": [round(x, 2) for x in os.getloadavg()]}
     env["cpu_probe"] = _cpu_probe()
 
+    from tools.qtime import time_query
+
     t_imp = time.time()
     from mempool_dumpster_spark.plans.registry import all_queries
     from mempool_dumpster_spark.session import get_spark
@@ -1315,61 +1320,34 @@ def main() -> None:
         # were pure harness noise — r4's headline moved +35% on zero batch
         # code change). The median is robust to one slow AND one lucky run;
         # per-query min/median/max is reported so a future delta can be told
-        # apart from dispersion at a glance. Queries with a history of
-        # oscillation get 5 runs. clearCache() before EACH attempt,
-        # otherwise the repeat reads the first attempt's materialized caches
-        # (CacheManager dedups by plan) and times a cache hit.
+        # apart from dispersion at a glance. time_query runs clearCache()
+        # before EACH attempt, otherwise the repeat reads the first
+        # attempt's materialized caches (CacheManager dedups by plan) and
+        # times a cache hit.
         # 5 timed runs for EVERYONE (r8; 3 runs + a 5-run VOLATILE subset
         # before): with 3 runs, max/min is decided by a single outlier
         # draw — r8 measured docs_simhash 1.32 and value_quantiles 1.29
         # on n=3 while every n=5 query sat ≤1.22. The median of 5 is also
         # strictly more robust, and the extra runs cost ~3 s total.
-        n_runs = 5
-        runs: list[float] = []
-        # One untimed PRIMING run at the benchmark SF first: the sf0.001
+        # Two untimed PRIMING runs at the benchmark SF first: the sf0.001
         # warm-up above exercises classloading/codegen compilation, but C2
         # JIT only fully optimizes the hot loops after they run at real
         # data volume — measured on q3 at sf0.1, the first full-size run
         # is 1.8× the steady state and the next runs decline monotonically
-        # (a warm-up slope, not AQE flapping; q5's 7-run spread without
-        # priming was already only 1.1×). Priming moves the timed runs
+        # (a warm-up slope, not AQE flapping). Priming moves the timed runs
         # onto the steady-state plateau, which is what a long-running
-        # deployment executes; the per-query dispersion below still
-        # reports any residual spread honestly.
-        # EVERY query gets a double priming pass (r8, verdict #2): r7
-        # measured dedup_earliest max/min 1.36 and docs_ngram_jaccard
-        # 1.31 with single priming — the warm-up slope is visible on
-        # non-volatile queries too, and two extra untimed passes per
-        # query are cheaper than shipping a phantom regression.
-        for _ in range(2):
-            spark.catalog.clearCache()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        for _ in range(n_runs):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
+        # deployment executes. The second priming run (r8, verdict #2):
+        # r7 measured dedup_earliest max/min 1.36 and docs_ngram_jaccard
+        # 1.31 with single priming.
+        runs = sorted(time_query(spark, fn, sf_dir, prime=2, runs=5))
         # Outlier policy (r10, verdict #1): when the 5-run spread exceeds
         # 1.35× the query hit transient contention — two extra runs make
         # the median of 7 shrug off up to 3 bad draws instead of 2. The
         # widened spread is still reported (min/max over ALL runs), so a
         # contended bench is visible, it just stops moving the headline.
-        runs.sort()
         if runs[-1] > 1.35 * runs[0]:
-            for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            runs.sort()
-        med = runs[len(runs) // 2]
-        timings[name] = round(med, 3)
-        dispersion[name] = {
-            "min": round(runs[0], 3),
-            "median": round(med, 3),
-            "max": round(runs[-1], 3),
-            "n": len(runs),
-        }
+            runs = sorted(runs + time_query(spark, fn, sf_dir, prime=0, runs=2))
+        timings[name], dispersion[name] = _dispersion(runs)
         # Mid-section probes after the known-heavy queries (r15 advice):
         # the edge pair can't see a transient spike that decays before
         # the after-probe — the observed docs_ngram_jaccard 1.97 s→31 s
@@ -1401,31 +1379,13 @@ def main() -> None:
             fn = queries[name]
             key = SF1_PREFIX + name
             try:
-                for _ in range(2):
-                    spark.catalog.clearCache()
-                    fn(spark, sf1_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                runs = []
-                for _ in range(SF1_N_RUNS):
-                    spark.catalog.clearCache()
-                    t0 = time.time()
-                    fn(spark, sf1_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(time.time() - t0)
+                runs = sorted(
+                    time_query(spark, fn, sf1_dir, prime=2, runs=SF1_N_RUNS)
+                )
             except Exception:
                 continue  # missing/failed entry degrades, never aborts
-            runs.sort()
-            med = runs[len(runs) // 2]
-            timings[key] = round(med, 3)
-            queries_sf1[key] = round(med, 3)
-            dispersion[key] = {
-                "min": round(runs[0], 3),
-                "median": round(med, 3),
-                "max": round(runs[-1], 3),
-                "n": len(runs),
-            }
+            timings[key], dispersion[key] = _dispersion(runs)
+            queries_sf1[key] = timings[key]
             p = _section_probe()
             p["after_query"] = key
             queries_probe_chain.append(p)

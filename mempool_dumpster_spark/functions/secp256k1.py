@@ -92,40 +92,6 @@ def _jmul(p: _JPoint, k: int) -> _JPoint:
     return result
 
 
-def _jmul_wnaf(p: _JPoint, k: int, width: int = 4) -> _JPoint:
-    """Width-4 wNAF scalar multiplication for a variable point: 8 precomputed
-    odd multiples, then one add per ~(width+1) doubles — ~2.4× fewer adds
-    than plain double-and-add."""
-    if k == 0 or p[2] == 0:
-        return _INF
-    # odd multiples P, 3P, ..., 15P
-    two_p = _jdouble(p)
-    pre = [p]
-    for _ in range((1 << (width - 1)) - 1):
-        pre.append(_jadd(pre[-1], two_p))
-    # wNAF digits, little-endian
-    digits = []
-    mod_mask = (1 << (width + 1)) - 1
-    half = 1 << width
-    while k:
-        if k & 1:
-            d = k & mod_mask
-            if d > half:
-                d -= mod_mask + 1
-            digits.append(d)
-            k -= d
-        else:
-            digits.append(0)
-        k >>= 1
-    acc = _INF
-    for d in reversed(digits):
-        acc = _jdouble(acc)
-        if d:
-            q = pre[(d if d > 0 else -d) >> 1]
-            acc = _jadd(acc, q if d > 0 else (q[0], P - q[1], q[2]))
-    return acc
-
-
 # GLV endomorphism (Gallant-Lambert-Vanstone; secp256k1 has the efficiently
 # computable endomorphism φ(x,y) = (βx, y) = λ·(x,y) because a=0). Constants
 # are the standard public values (see SEC 2 curve parameters and the GLV

@@ -1765,6 +1765,11 @@ def docs_quality_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: span length in words of the duplicated-span queries: _dup_spans's
+#: k-gram size, which docs_dup_span_coverage's span arithmetic must match
+SPAN_K = 5
+
+
 @register(
     "docs_dup_span_coverage",
     overflow=True,  # oracle-checked via selfcheck; beyond the 50-slot cap
@@ -1822,8 +1827,8 @@ def docs_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     w, spans = _dup_spans(docs)
     # ONE consumer of `spans` (r17): the span count and the covered-
     # position count fold in a single aggregate over the exploded
-    # positions — sequence(start, start+4) always emits exactly 5
-    # elements, so n_spans ≡ count(*) div 5 exactly, and the distinct
+    # positions — sequence(start, start+SPAN_K-1) always emits exactly
+    # SPAN_K elements, so n_spans ≡ count(*) div SPAN_K, and the distinct
     # position count is size(collect_set(p)) (per-doc bounded by
     # n_words; no Expand double-scan the way a mixed
     # count+countDistinct aggregate plans). The pre-r17 form ran the
@@ -1835,11 +1840,11 @@ def docs_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = spans.select(
         "doc_id",
         F.explode(
-            F.sequence(F.col("start_pos"), F.col("start_pos") + 4)
+            F.sequence(F.col("start_pos"), F.col("start_pos") + (SPAN_K - 1))
         ).alias("p"),
     )
     both = pos.groupBy("doc_id").agg(
-        F.expr("count(*) div 5").alias("n_spans"),
+        F.expr(f"count(*) div {SPAN_K}").alias("n_spans"),
         F.size(F.collect_set("p")).alias("covered"),
     )
     base = docs.select(
@@ -1862,7 +1867,7 @@ def docs_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dup_spans(docs: DataFrame, k: int = 5, min_docs: int = 2):
+def _dup_spans(docs: DataFrame, k: int = SPAN_K, min_docs: int = 2):
     """Shared span machinery for docs_dup_span_coverage / _strip: returns
     (w, spans) where w = (doc_id, __w words array) and spans = (doc_id,
     start_pos 1-based) of every k-gram occurring in ≥ min_docs distinct
@@ -1894,7 +1899,7 @@ def _dup_spans(docs: DataFrame, k: int = 5, min_docs: int = 2):
     return w, spans
 
 
-def _covered_positions(spans: DataFrame, k: int = 5) -> DataFrame:
+def _covered_positions(spans: DataFrame, k: int = SPAN_K) -> DataFrame:
     """(doc_id, p): distinct 1-based token positions covered by any span —
     overlap-merged via the position-set union."""
     return spans.select(

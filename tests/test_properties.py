@@ -72,7 +72,6 @@ def test_secp256k1_mul_consistency(k1, k2):
         N,
         _jadd,
         _jmul,
-        _jmul_wnaf,
         _mul_g,
         _to_affine,
     )
@@ -89,7 +88,6 @@ def test_secp256k1_mul_consistency(k1, k2):
         return
     g = (GX, GY, 1)
     assert _to_affine(_mul_g(k1)) == _to_affine(_jmul(g, k1))
-    assert _to_affine(_jmul_wnaf(g, k2)) == _to_affine(_jmul(g, k2))
     lhs = _to_affine(_jadd(_mul_g(k1), _mul_g(k2)))
     rhs = _to_affine(_mul_g((k1 + k2) % N))
     assert lhs == rhs
