@@ -1734,13 +1734,14 @@ def docs_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Goldstein 1998), the rerank every retrieval-augmented data-curation "
     "loop runs on top of ANN: retrieve the exact top-10 pool per query, "
     "then greedily pick 3 results maximizing λ·sim(q,d) − (1−λ)·max "
-    "sim(d, picked) with λ=0.7. The greedy recursion is UNROLLED into "
-    "k declarative argmax stages generated programmatically from k "
-    "(ml.similarity.mmr_rerank; k=3 here, parity-pinned against "
-    "sequential greedy for k ≤ 8 in tests/test_properties.py) — windows "
-    "+ equi-joins over the m=10 pool, m² pairwise sims per query, "
-    "bounded by the pool not the corpus; no driver loop, one Catalyst "
-    "DAG. Scores are EXACT BIGINTs: similarities round to 4 "
+    "sim(d, picked) with λ=0.7. The greedy recursion is one per-query "
+    "fold (ml.similarity.mmr_rerank; k=3 here, parity-pinned against "
+    "sequential greedy for k ≤ 12 in tests/test_properties.py): each "
+    "query's m=10 pool candidates and their unit vectors form one array, "
+    "and aggregate(sequence(1, k), …) makes the k picks over it, "
+    "computing each pairwise penalty in place — bounded by the pool, not "
+    "the corpus; no driver loop, no per-pick join, and a plan that does "
+    "not grow with k. Scores are EXACT BIGINTs: similarities round to 4 "
     "decimals then scale to basis points (the ×10000 double is ~0.5 from "
     "any rounding boundary, so the int cast is engine-safe), and the MMR "
     "combination is integer 7·s − 3·ps — no second float rounding, whose "
@@ -1749,31 +1750,31 @@ def docs_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "therefore bit-for-bit reproducible in the oracle.",
 )
 def emb_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_tables(spark, sf_dir, ["embeddings"])
-    # Construction form: `units` is one spark.sql over the base table
-    # and pool/pair are alias-joins with string expressions on the frames
-    # themselves, a few dozen py4j round trips instead of the ~150 of a
-    # Column form (~0.9 s of plan construction, measured r16). The expressions
-    # are verbatim ports of the Column forms: unit = emb/nrm
-    # component-wise with the same sequential-fold dot, so every
-    # sim_r/s_bp/ps_bp value is bit-identical. pool and pair stay CACHED:
-    # the unrolled MMR stages reference pair i-1 times at pick i and each
-    # reference would otherwise re-derive the pool self-join + two unit
-    # joins + dot products; both frames are |Q|·m²-bounded, never
-    # corpus-sized. These within-query caches are never named in the
-    # session catalog (dropping a temp view uncaches its plan) nor
-    # unpersisted here; tests/test_plans.py pins them in the optimized
-    # plan. Repeated calls reuse the SAME CacheManager entries
-    # (plan-identical); clearCache() releases them (bench.py clears
-    # between timed runs).
-    dot_sql = (
-        "aggregate(zip_with({u}, {v}, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    from mempool_dumpster_spark.ml.similarity import (
+        dot_sql,
+        mmr_rerank,
+        sim_bp_sql,
     )
+
+    load_tables(spark, sf_dir, ["embeddings"])
+    # Construction form: `units` is one spark.sql over the base table and
+    # pool is an alias-join with string expressions on the frame itself,
+    # a few dozen py4j round trips instead of the ~150 of a Column form
+    # (~0.9 s of plan construction, measured r16). The expressions are
+    # verbatim ports of the Column forms: unit = emb/nrm component-wise
+    # with the same sequential-fold dot, so every s_bp and penalty is
+    # bit-identical. `units` is CACHED because the query side and the
+    # candidate side both read it; it is corpus-sized (one unit vector
+    # per embedding), which the query's own scan is anyway. The cache is
+    # never named in the session catalog (dropping a temp view uncaches
+    # its plan) nor unpersisted here; tests/test_plans.py pins it in the
+    # optimized plan. Repeated calls reuse the SAME CacheManager entry
+    # (plan-identical); clearCache() releases it (bench.py clears between
+    # timed runs).
     units = spark.sql(f"""
       SELECT vec_id, transform(emb, x -> x / nrm) AS unit
       FROM (
-        SELECT vec_id, emb, sqrt({dot_sql.format(u="emb", v="emb")}) AS nrm
+        SELECT vec_id, emb, sqrt({dot_sql("emb", "emb")}) AS nrm
         FROM (SELECT vec_id,
                      transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
               FROM embeddings)
@@ -1785,35 +1786,15 @@ def emb_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(q), F.expr("c.vec_id <> q.vec_id"))
         .selectExpr(
             "q.vec_id AS query_id", "c.vec_id AS neighbor_id",
-            f"round({dot_sql.format(u='q.unit', v='c.unit')}, 4) AS sim_r",
+            f"{sim_bp_sql('q.unit', 'c.unit')} AS s_bp", "c.unit",
         )
         .selectExpr(
             "*", "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY sim_r DESC, neighbor_id) AS rk",
+            " ORDER BY s_bp DESC, neighbor_id) AS rk",
         )
         .where("rk <= 10")
-        .selectExpr(
-            "query_id", "neighbor_id",
-            "CAST(round(sim_r * 10000) AS BIGINT) AS s_bp", "rk",
-        )
-        .cache()
     )
-    ps = dot_sql.format(u="ua.unit", v="ub.unit")
-    pair = (
-        pool.alias("p1")
-        .join(pool.alias("p2"), F.expr(
-            "p2.query_id = p1.query_id AND p2.neighbor_id <> p1.neighbor_id"))
-        .join(units.alias("ua"), F.expr("ua.vec_id = p1.neighbor_id"))
-        .join(units.alias("ub"), F.expr("ub.vec_id = p2.neighbor_id"))
-        .selectExpr(
-            "p1.query_id", "p1.neighbor_id AS a", "p2.neighbor_id AS b",
-            f"CAST(round(round({ps}, 4) * 10000) AS BIGINT) AS ps_bp",
-        )
-        .cache()
-    )
-    from mempool_dumpster_spark.ml.similarity import mmr_rerank
-
-    return mmr_rerank(pool, pair, k=3)
+    return mmr_rerank(pool, k=3)
 
 
 @register(

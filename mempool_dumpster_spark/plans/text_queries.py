@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mempool_dumpster_spark.ml.similarity import cosine_near_pairs
+from mempool_dumpster_spark.ml.similarity import cosine_near_pairs, dot_sql
 from mempool_dumpster_spark.plans.registry import register
 from mempool_dumpster_spark.plans.tables import load_tables, scan_spread_hint
 
@@ -817,14 +817,10 @@ def emb_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Column round-trips for the HOF dot-product lambdas (0.45 s of
     # driver time per invocation, measured; same optimized plan).
     spread = scan_spread_hint(spark, sf_dir, "embeddings", "neighbor_id")
-    dot = (
-        "aggregate(zip_with({u}, {v}, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
     return spark.sql(f"""
       WITH n AS (
         SELECT vec_id, emb,
-               sqrt({dot.format(u="emb", v="emb")}) AS norm
+               sqrt({dot_sql("emb", "emb")}) AS norm
         FROM (SELECT vec_id,
                      transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
               FROM embeddings)
@@ -842,7 +838,7 @@ def emb_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                ) AS rank
         FROM (
           SELECT /*+ BROADCAST(q) */ query_id, neighbor_id,
-                 round({dot.format(u="q_emb", v="c_emb")}
+                 round({dot_sql("q_emb", "c_emb")}
                        / (q_norm * c_norm), 4) AS sim_r
           FROM c JOIN q ON neighbor_id <> query_id
         )
@@ -1814,8 +1810,9 @@ SPAN_K = 5
     "cut). Plan: positional grams from ONE posexplode → distinct "
     "(doc,gram) → frequent-gram set → gram equi-join back ONCE → "
     "explode(sequence) → one per-doc aggregate (count(*) div 5 is the "
-    "exact span count; size(collect_set(p)) the covered positions). "
-    "Every shuffle is bounded "
+    "exact span count; size(collect_set(p)) the covered positions, so "
+    "one document's covered positions sit in one aggregation buffer: "
+    "memory per document is O(its token count)). Every shuffle is bounded "
     "by gram/span cardinality (the frequent set is corpus-vocabulary "
     "sized, NOT broadcast — the join is a plain hash join, so benchmark "
     "corpora of any size work); the gram frame is cached for its two "

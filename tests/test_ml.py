@@ -2740,6 +2740,33 @@ def test_ivfpq_ann_recall_on_testdata(spark):
     assert recall >= 0.9, f"IVF-PQ recall@3 = {recall:.2f} < 0.9"
 
 
+def test_ivfpq_training_jobs_keep_the_callers_job_group(spark):
+    """ivfpq_topk trains its centroids and codebooks on two pool threads;
+    their jobs must carry the caller's job group, or cancelJobGroup
+    cannot reach them."""
+    import os
+
+    sf_dir = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf_dir):
+        pytest.skip("driver testdata not present")
+    from mempool_dumpster_spark.ml.similarity import ivfpq_topk
+    from mempool_dumpster_spark.plans.tables import load_tables
+
+    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    untagged = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ivfpq-build", "ivfpq_topk build")
+    try:
+        rows = ivfpq_topk(emb, emb.filter(F.col("vec_id") < 3), k=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    assert tracker.getJobIdsForGroup("ivfpq-build")
+    assert set(tracker.getJobIdsForGroup(None)) - untagged == set()
+
+
 def test_pq_codebook_roundtrip_and_reuse(spark, vectors):
     """PQ persisted-index lifecycle: codebooks round-trip through JSON
     bit-for-bit, and a pq_topk served from the deserialized index equals

@@ -480,6 +480,34 @@ def test_load_tables_memo_is_per_session(spark):
     assert spark.sql("SELECT count(*) FROM events").first()[0] > 0
 
 
+def test_scan_spread_hint_reads_each_footer_once_per_session(
+    spark, tmp_path, monkeypatch
+):
+    """The row-group probe opens a table's parquet footer once per
+    session; a newSession() sibling gets its own entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mempool_dumpster_spark.plans.tables import scan_spread_hint
+
+    pq.write_table(pa.table({"k": [1, 2, 3]}), str(tmp_path / "t.parquet"))
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(path, *args, **kwargs):
+        opened.append(path)
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    first = scan_spread_hint(spark, str(tmp_path), "t", "k")
+    assert scan_spread_hint(spark, str(tmp_path), "t", "k") == first
+    assert len(opened) == 1
+    sibling = spark.newSession()
+    assert scan_spread_hint(sibling, str(tmp_path), "t", "k") == first
+    assert scan_spread_hint(sibling, str(tmp_path), "t", "k") == first
+    assert len(opened) == 2
+
+
 #: queries whose plans reference a within-query .cache() more than once
 CACHED_SUBTREE_QUERIES = [
     "docs_minhash_lsh_pairs",
@@ -512,16 +540,12 @@ def _build_cached_subtree_users(s):
 
     docs = load_tables(s, SF_DIR, ["documents"])["documents"]
     pool = s.createDataFrame(
-        [(1, 10, 900, 1), (1, 11, 800, 2)],
-        "query_id long, neighbor_id long, s_bp long, rk int",
-    )
-    pair = s.createDataFrame(
-        [(1, 10, 11, 500), (1, 11, 10, 500)],
-        "query_id long, a long, b long, ps_bp long",
+        [(1, 10, 900, [1.0, 0.0]), (1, 11, 800, [0.0, 1.0])],
+        "query_id long, neighbor_id long, s_bp long, unit array<double>",
     )
     return [
         *(all_queries()[q](s, SF_DIR) for q in CACHED_SUBTREE_QUERIES),
-        mmr_rerank(pool, pair, k=2),
+        mmr_rerank(pool, k=2),
         minhash_signatures(shingle_sets(docs)),
     ]
 

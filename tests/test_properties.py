@@ -602,12 +602,12 @@ def test_dup_span_coverage_matches_bruteforce(spark, docs):
 )
 @settings(max_examples=8, deadline=None)
 def test_mmr_unrolled_equals_sequential_greedy(spark, vecs, tmp_path_factory):
-    """emb_mmr_topk's three unrolled argmax stages must equal the
+    """emb_mmr_topk's three greedy picks must equal the
     SEQUENTIAL greedy MMR algorithm (pick argmax of 7*s_bp - 3*max ps_bp
     over picked, k=3, pool=10, id tiebreak) run in plain Python over the
     same rounded similarities — on random small integer embeddings
-    (nonzero norms by construction). Guards the unrolling itself, not
-    just the planted-geometry case."""
+    (nonzero norms by construction). Guards the fold itself, not just
+    the planted-geometry case."""
     import math
     import os
 
@@ -657,9 +657,9 @@ def test_mmr_unrolled_equals_sequential_greedy(spark, vecs, tmp_path_factory):
 
     assert got == greedy(3)
 
-    # k-parametric form (r9): mmr_rerank's generated unrolling must match
-    # sequential greedy well past the registered k=3 — k=8 exceeds the
-    # pool on most drawn corpora, exercising the pool-exhaustion edge too
+    # k-parametric form: mmr_rerank's fold must match sequential greedy
+    # well past the registered k=3 — k=12 exceeds the 10-candidate pool,
+    # exercising the pool-exhaustion edge too
     from mempool_dumpster_spark.ml.similarity import (
         dot,
         mmr_rerank,
@@ -674,12 +674,12 @@ def test_mmr_unrolled_equals_sequential_greedy(spark, vecs, tmp_path_factory):
         F.col("vec_id").alias("query_id"), F.col("unit").alias("q_unit")
     )
     sims = (
-        u.select(F.col("vec_id").alias("neighbor_id"), F.col("unit").alias("c_unit"))
+        u.select(F.col("vec_id").alias("neighbor_id"), "unit")
         .crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
-            "query_id", "neighbor_id",
-            F.round(dot(F.col("q_unit"), F.col("c_unit")), 4).alias("sim_r"),
+            "query_id", "neighbor_id", "unit",
+            F.round(dot(F.col("q_unit"), F.col("unit")), 4).alias("sim_r"),
         )
     )
     wq = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), "neighbor_id")
@@ -688,35 +688,15 @@ def test_mmr_unrolled_equals_sequential_greedy(spark, vecs, tmp_path_factory):
         .filter(F.col("rk") <= 10)
         .select(
             "query_id", "neighbor_id",
-            F.round(F.col("sim_r") * 10000).cast("bigint").alias("s_bp"), "rk",
+            F.round(F.col("sim_r") * 10000).cast("bigint").alias("s_bp"), "unit",
         )
-        .cache()
     )
-    ua = u.select(F.col("vec_id").alias("a"), F.col("unit").alias("unit_a"))
-    ub = u.select(F.col("vec_id").alias("b"), F.col("unit").alias("unit_b"))
-    pair = (
-        pool.select("query_id", F.col("neighbor_id").alias("a"))
-        .join(
-            pool.select(F.col("query_id").alias("query_id2"), F.col("neighbor_id").alias("b")),
-            (F.col("query_id") == F.col("query_id2")) & (F.col("a") != F.col("b")),
-        )
-        .join(ua, "a")
-        .join(ub, "b")
-        .select(
-            "query_id", "a", "b",
-            F.round(F.round(dot(F.col("unit_a"), F.col("unit_b")), 4) * 10000)
-            .cast("bigint").alias("ps_bp"),
-        )
-        .cache()
-    )
-    for k in (1, 8):
+    for k in (1, 3, 8, 12):
         got_k = {
             (r["query_id"], r["pick"], r["neighbor_id"], r["score_bp"])
-            for r in mmr_rerank(pool, pair, k=k).collect()
+            for r in mmr_rerank(pool, k=k).collect()
         }
         assert got_k == greedy(k), f"k={k}"
-    pool.unpersist()
-    pair.unpersist()
 
 
 @given(
@@ -778,19 +758,37 @@ def test_mmr_rerank_rejects_fractional_weights(spark):
     from mempool_dumpster_spark.ml.similarity import mmr_rerank
 
     pool = spark.createDataFrame(
-        [(1, 2, 9000, 1), (1, 3, 8000, 2)],
-        "query_id long, neighbor_id long, s_bp long, rk int",
-    )
-    pair = spark.createDataFrame(
-        [(1, 2, 3, 5000), (1, 3, 2, 5000)],
-        "query_id long, a long, b long, ps_bp long",
+        [(1, 2, 9000, [1.0, 0.0]), (1, 3, 8000, [0.5, 0.75**0.5])],
+        "query_id long, neighbor_id long, s_bp long, unit array<double>",
     )
     with pytest.raises(ValueError, match="relevance_weight"):
-        mmr_rerank(pool, pair, k=1, relevance_weight=0.7, diversity_weight=3)
+        mmr_rerank(pool, k=1, relevance_weight=0.7, diversity_weight=3)
     with pytest.raises(ValueError, match="diversity_weight"):
-        mmr_rerank(pool, pair, k=1, relevance_weight=7, diversity_weight=0.3)
+        mmr_rerank(pool, k=1, relevance_weight=7, diversity_weight=0.3)
     # float-typed but integral weights stay accepted (7.0 == 7)
     rows = mmr_rerank(
-        pool, pair, k=1, relevance_weight=7.0, diversity_weight=3.0
+        pool, k=1, relevance_weight=7.0, diversity_weight=3.0
     ).collect()
     assert {(r["query_id"], r["neighbor_id"]) for r in rows} == {(1, 2)}
+
+
+def test_mmr_rerank_plan_size_is_independent_of_k(spark):
+    """Greedy MMR is one per-query fold: picking 12 builds the same joins
+    and aggregates as picking 3 (an unrolled form adds joins per pick)."""
+    import re
+
+    from mempool_dumpster_spark.ml.similarity import mmr_rerank
+
+    pool = spark.createDataFrame(
+        [(1, 2, 9000, [1.0, 0.0]), (1, 3, 8000, [0.5, 0.75**0.5]),
+         (2, 1, 7000, [0.0, 1.0])],
+        "query_id long, neighbor_id long, s_bp long, unit array<double>",
+    )
+
+    def node_counts(k):
+        plan = mmr_rerank(pool, k=k)._jdf.queryExecution().optimizedPlan()
+        names = re.findall(r"^[\s:+|-]*(\w+)", plan.toString(), re.M)
+        return names.count("Join"), names.count("Aggregate")
+
+    assert node_counts(3) == node_counts(12)
+    assert node_counts(3)[1] == 1

@@ -36,10 +36,16 @@ def _task(sid, run_ms, gc_ms=0, remote=0, local=0, written=0, mem=0, disk=0):
         "Memory Bytes Spilled": mem, "Disk Bytes Spilled": disk}}
 
 
-def _stage_done(sid, name, start_ms, end_ms):
+def _stage_done(sid, name, start_ms, end_ms, scopes=()):
+    """`scopes`: (rdd id, operator scope name or None) per RDD."""
+    rdds = [{"RDD ID": rid, "Name": "MapPartitionsRDD",
+             **({"Scope": json.dumps({"id": str(rid), "name": scope})}
+                if scope else {})}
+            for rid, scope in scopes]
     return {"Event": "SparkListenerStageCompleted", "Stage Info": {
         "Stage ID": sid, "Stage Name": name,
-        "Submission Time": start_ms, "Completion Time": end_ms}}
+        "Submission Time": start_ms, "Completion Time": end_ms,
+        "RDD Info": rdds}}
 
 
 def test_stage_records_sums_and_attribution():
@@ -51,7 +57,9 @@ def test_stage_records_sums_and_attribution():
         _task(0, 200, disk=6),
         _stage_done(0, "map at A", 1_000_000, 1_000_450),
         _task(1, 50),
-        _stage_done(1, "save at A", 1_000_500, 1_000_560),
+        _stage_done(1, "save at A", 1_000_500, 1_000_560, scopes=[
+            (3, "Scan csv"), (7, "Exchange"), (4, "WholeStageCodegen (2)"),
+            (5, "WholeStageCodegen (2)"), (6, None)]),
         # tag B by job group
         _job(1, 1_001_000, [2], group="qtime:b"),
         _task(2, 70),
@@ -83,6 +91,10 @@ def test_stage_records_sums_and_attribution():
     }
     assert a["stages"][1]["tasks"] == 1
     assert a["stages"][1]["wall_s"] == 0.06
+    # operator scopes, output first, name the stage; no scope: Stage Name
+    assert a["stages"][1]["name"] == (
+        "Exchange ← WholeStageCodegen (2) ← Scan csv"
+    )
 
     # B: its own job group, plus the untagged job inside B's window;
     # neither the "other" tag nor the untagged job outside every window

@@ -78,17 +78,29 @@ def _new_stage(sid: int) -> dict:
             "spill_bytes": 0}
 
 
+def _stage_label(info: dict) -> str:
+    """The distinct operator scopes of a stage's RDDs, output first
+    (`Exchange ← WholeStageCodegen (2) ← Scan csv`), else Spark's
+    `Stage Name`, which for most SQL stages names only a JVM callback."""
+    names: list[str] = []
+    for rdd in sorted(info.get("RDD Info") or [], key=lambda r: -r["RDD ID"]):
+        name = json.loads(rdd.get("Scope") or "{}").get("name")
+        if name and name not in names:
+            names.append(name)
+    return " ← ".join(names) or info.get("Stage Name", "")
+
+
 def stage_records(lines, windows: dict[str, tuple[float, float]]) -> dict:
     """Per tag in `windows`: {"jobs": n, "stages": [record, ...]} for the
     jobs of that tag in a Spark event log (`lines` yields its JSON lines).
 
     A job belongs to the tag in its job description, else its job group.
-    A job with neither (the engine's own worker threads do not inherit
+    A job with neither (one submitted from a thread that did not inherit
     the caller's local properties) belongs to the tag whose (start, end)
     window, in epoch seconds, holds its submission time. One record per
-    stage that ran: stage id, name, wall_s, tasks, task_s (summed
-    executor run time), max_task_s, gc_s, shuffle read / write bytes and
-    spill bytes (memory + disk)."""
+    stage that ran: stage id, name (`_stage_label`), wall_s, tasks,
+    task_s (summed executor run time), max_task_s, gc_s, shuffle read /
+    write bytes and spill bytes (memory + disk)."""
     out = {tag: {"jobs": 0, "stages": []} for tag in windows}
     stage_tag: dict[int, str] = {}
     stages: dict[int, dict] = {}
@@ -117,7 +129,7 @@ def stage_records(lines, windows: dict[str, tuple[float, float]]) -> dict:
             sid = info["Stage ID"]
             if sid in stage_tag and "Submission Time" in info:
                 st = stages.setdefault(sid, _new_stage(sid))
-                st["name"] = info.get("Stage Name", "")
+                st["name"] = _stage_label(info)
                 st["wall_s"] = (
                     info.get("Completion Time", info["Submission Time"])
                     - info["Submission Time"]
@@ -239,7 +251,7 @@ def main(argv: list[str]) -> int:
                     f" maxTask {st['max_task_s']:6.3f}s gc {st['gc_s']:5.3f}s"
                     f" shufR {st['shuffle_read_bytes']:>9d}B"
                     f" shufW {st['shuffle_write_bytes']:>9d}B"
-                    f" spill {st['spill_bytes']:>9d}B  {st['name'][:50]}"
+                    f" spill {st['spill_bytes']:>9d}B  {st['name'][:80]}"
                 )
     if out_path:
         from bench import _md5_mt_sec
