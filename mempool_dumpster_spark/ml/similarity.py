@@ -1211,8 +1211,12 @@ def ivfpq_topk(
         from pyspark import inheritable_thread_target
 
         # the trainers' jobs carry the caller's job group, description and
-        # tags (so cancelJobGroup reaches them); a plain pool thread has none
-        inherit = inheritable_thread_target(candidates.sparkSession)
+        # tags (so cancelJobGroup reaches them); a plain pool thread has none.
+        # With pinned threads off it hands the session back: no wrapper.
+        session = candidates.sparkSession
+        inherit = inheritable_thread_target(session)
+        if inherit is session:
+            inherit = lambda f: f  # noqa: E731
         unit = c.select(F.col("c_unit").alias("unit"))
         with ThreadPoolExecutor(max_workers=2) as pool:
             fut_cent = (

@@ -56,13 +56,6 @@ _VIEW_BOUND: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
     weakref.WeakKeyDictionary()
 )
 
-#: Parquet footer row-group count per table path, per session, with the
-#: same weak-key lifetime as _SCAN_CACHE: scan_spread_hint runs on every
-#: query construction, and a footer read costs a file open each time.
-_ROW_GROUPS: "weakref.WeakKeyDictionary[SparkSession, dict[str, int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
@@ -164,15 +157,12 @@ def scan_spread_hint(df_or_spark, sf_dir: str, name: str, *keys: str) -> str:
     )
     path = f"{sf_dir}/{name}.parquet"
     est_splits = max(1, _size_bytes(path) // max_split)
-    groups = _ROW_GROUPS.setdefault(spark, {})
-    if path not in groups:
-        try:
-            import pyarrow.parquet as pq
+    try:
+        import pyarrow.parquet as pq
 
-            groups[path] = pq.ParquetFile(path).num_row_groups
-        except Exception:
-            pass
-    est_splits = max(est_splits, groups.get(path, 0))
+        est_splits = max(est_splits, pq.ParquetFile(path).num_row_groups)
+    except Exception:
+        pass
     if est_splits >= par:
         return ""
     return f"/*+ REPARTITION({par}, {', '.join(keys)}) */"
