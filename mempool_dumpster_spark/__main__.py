@@ -386,8 +386,9 @@ def cmd_ann(args, spark: SparkSession | None = None) -> int:
     table and persists the artifacts as one JSON file; `append` encodes
     NEW vectors with those artifacts and appends (no retrain, existing
     files unmodified); `query` serves top-k from the table via the
-    matching *_topk_pretrained, whose results are bit-identical to the
-    inline rung under the same artifacts."""
+    matching *_topk_pretrained, which runs the inline rung's own serve
+    step over the table, so its rows are the inline rung's under the
+    same artifacts."""
     import json
 
     from mempool_dumpster_spark.ml.similarity import (
@@ -472,10 +473,7 @@ def cmd_ann(args, spark: SparkSession | None = None) -> int:
                 },
                 f,
             )
-        n = spark.table(args.table).count()
-        print(json.dumps({"table": args.table, "index_rows": n,
-                          "artifacts": args.artifacts}))
-        return 0
+        return _emit_index_rows(args, spark)
     if args.action == "append":
         centroids, codebooks, meta = load_artifacts()
         append_ivfpq_index(
@@ -488,9 +486,7 @@ def cmd_ann(args, spark: SparkSession | None = None) -> int:
             dim=from_artifact(meta, "dim", args.dim, 64),
             n_assign=from_artifact(meta, "n_assign", args.n_assign, 1),
         )
-        n = spark.table(args.table).count()
-        print(json.dumps({"table": args.table, "index_rows": n}))
-        return 0
+        return _emit_index_rows(args, spark)
     # query
     if not args.queries:
         raise SystemExit("ann query requires --queries")
@@ -511,6 +507,20 @@ def cmd_ann(args, spark: SparkSession | None = None) -> int:
         refine=args.refine,
     )
     return _emit_query_result(args, spark, out)
+
+
+def _emit_index_rows(args, spark) -> int:
+    """Print an `ann build`/`append` summary: the index table's row
+    count, plus the artifact file a build wrote."""
+    import json
+
+    summary = {
+        "table": args.table, "index_rows": spark.table(args.table).count()
+    }
+    if args.action == "build":
+        summary["artifacts"] = args.artifacts
+    print(json.dumps(summary))
+    return 0
 
 
 def _emit_query_result(args, spark, out) -> int:
@@ -563,19 +573,14 @@ def _ann_sq8(args, spark, vecs) -> int:
         )
         with open(args.artifacts, "w") as f:
             f.write(sq8_bounds_to_json(bounds))
-        n = spark.table(args.table).count()
-        print(json.dumps({"table": args.table, "index_rows": n,
-                          "artifacts": args.artifacts}))
-        return 0
+        return _emit_index_rows(args, spark)
     if args.action == "append":
         bounds = load_bounds()
         append_sq8_index(
             vecs, args.table, bounds,
             id_col=args.id_col, emb_col=args.emb_col, dim=len(bounds[0]),
         )
-        n = spark.table(args.table).count()
-        print(json.dumps({"table": args.table, "index_rows": n}))
-        return 0
+        return _emit_index_rows(args, spark)
     if not args.queries:
         raise SystemExit("ann query requires --queries")
     bounds = load_bounds()
@@ -625,18 +630,13 @@ def _ann_bq(args, spark, vecs) -> int:
         )
         with open(args.artifacts, "w") as f:
             json.dump({"format": "bq-index-artifacts-v1", "dim": dim}, f)
-        n = spark.table(args.table).count()
-        print(json.dumps({"table": args.table, "index_rows": n,
-                          "artifacts": args.artifacts}))
-        return 0
+        return _emit_index_rows(args, spark)
     if args.action == "append":
         append_bq_index(
             vecs, args.table,
             id_col=args.id_col, emb_col=args.emb_col, dim=load_dim(),
         )
-        n = spark.table(args.table).count()
-        print(json.dumps({"table": args.table, "index_rows": n}))
-        return 0
+        return _emit_index_rows(args, spark)
     if not args.queries:
         raise SystemExit("ann query requires --queries")
     dim = load_dim()

@@ -26,15 +26,32 @@ DECIMAL-exact Lloyd — so indexes are bit-stable across partitionings):
   are only touched for the refine·k exact re-rank.
 - `ivfpq_topk` — the canonical 100 TB composition (FAISS IVFPQ): IVF
   prunes WHICH vectors a query looks at, PQ codes decide the ORDER
-  cheaply, exact cosine re-ranks the shortlist. All four approximate
-  paths carry measured recall@3 gates (0.967 on the isotropic driver
-  embeddings) in tests and bench.
+  cheaply, exact cosine re-ranks the shortlist.
+- `sq8_topk` / `bq_topk` — 8-bit scalar and 1-bit sign codes scored by
+  pure Catalyst expressions, then the same exact re-rank.
+
+The approximate paths carry measured recall@3 gates (0.967 on the
+isotropic sf0.01 test embeddings) in tests and bench.
+
+Each persistable quantizer (IVF-PQ, SQ8, BQ) has one BUILD step (the
+candidate unit frame → its code rows) and one SERVE step (code rows +
+queries → top-k), and every public entry point composes the two: the
+inline rung is serve(build(candidates)), `write_*_index` persists
+build(candidates), `append_*_index` builds the new rows with the stored
+artifacts, and `*_topk_pretrained` is serve(spark.table(index)). So an
+inline rung and its pretrained twin return the same rows by
+construction. Every serve step collects its queries through
+`_serve_queries` and ends in the one exact re-rank tail,
+`_shortlist_rerank`: the refine·k best prescores per query, their unit
+vectors (the inline build's cached frame, or the raw candidates fetched
+by a broadcast semi-join), exact cosine, per-query rank.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -180,6 +197,96 @@ def with_unit_vector(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
     ).drop("__norm")
 
 
+def _candidate_units(df: DataFrame, id_col: str, emb_col: str) -> DataFrame:
+    """Candidate side of every rung, index writer and appender:
+    (neighbor_id, c_unit), spread across the cores before the normalize
+    fold (see `_spread`)."""
+    return with_unit_vector(_spread(df), emb_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
+    )
+
+
+def _query_units(queries: DataFrame, id_col: str, emb_col: str) -> DataFrame:
+    """Query side of every rung: (query_id, q_unit)."""
+    return with_unit_vector(queries, emb_col).select(
+        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
+    )
+
+
+def _serve_queries(
+    queries: DataFrame,
+    id_col: str,
+    emb_col: str,
+    serve: Callable[[DataFrame, list], DataFrame],
+) -> DataFrame:
+    """Query side of the serve steps that need the queries on the
+    driver (PQ / IVF-PQ ADC tables and cell probes, SQ8 / BQ score
+    literals): collect the query units — |Q| is a small batched set by
+    contract — and return `serve(q, q_rows)`. An empty query set returns
+    the empty top-k frame here, before any per-query table is built
+    from zero rows."""
+    q = _query_units(queries, id_col, emb_col)
+    q_rows = q.collect()
+    if not q_rows:
+        return _empty_topk_result(q)
+    return serve(q, q_rows)
+
+
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The rank step every rung ends in: exact cosine of each
+    (query_id, neighbor_id) pair from its `q_unit` and `c_unit` (the
+    sequential `dot` fold), then the per-query top k by sim desc with a
+    neighbor_id tiebreak."""
+    sims = pairs.select(
+        "query_id",
+        "neighbor_id",
+        dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
+    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _shortlist_rerank(
+    scored: DataFrame,
+    candidates: DataFrame,
+    q: DataFrame,
+    k: int,
+    refine: int,
+    id_col: str,
+    emb_col: str,
+    ascending: bool = False,
+    c: DataFrame | None = None,
+) -> DataFrame:
+    """The exact re-rank tail of every prescoring rung (IVF, PQ, IVF-PQ,
+    SQ8, BQ; inline and pretrained), the fp-parity-critical piece,
+    audited in one place. `scored` is (query_id, neighbor_id, approx):
+    keep each query's refine·k best approx (ascending for distances,
+    descending for similarities; neighbor_id tiebreak) and rank them by
+    exact cosine. The shortlist's unit vectors come from the build's
+    cached unit frame `c` when the caller has one (an inline rung), else
+    from the raw `candidates` by a broadcast semi-join that runs BEFORE
+    the normalize, so the ~ms-per-row interpreted fold touches only
+    refine·k·|Q| vectors. Both give the same units, so the sims are
+    bit-identical to what `cosine_topk` emits for the same pairs."""
+    order = F.col("approx").asc() if ascending else F.col("approx").desc()
+    w = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
+    shortlist = (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= refine * k)
+        .select("query_id", "neighbor_id")
+    )
+    if c is not None:
+        units = shortlist.join(c, "neighbor_id")
+    else:
+        fetched = candidates.select(
+            F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("__emb")
+        ).join(F.broadcast(shortlist), "neighbor_id")
+        units = with_unit_vector(fetched, "__emb").withColumnRenamed(
+            "unit", "c_unit"
+        )
+    return _exact_topk(units.join(F.broadcast(q), "query_id"), k)
+
+
 def cosine_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -189,25 +296,13 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query → (query_id, neighbor_id, sim,
     rank). Query side is broadcast; candidate scan is a single pass."""
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )  # single pass — no cache
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
-    sims = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    c = _candidate_units(candidates, id_col, emb_col)  # single pass — no cache
+    q = _query_units(queries, id_col, emb_col)
+    return _exact_topk(
+        c.crossJoin(F.broadcast(q)).filter(
+            F.col("neighbor_id") != F.col("query_id")
+        ),
+        k,
     )
 
 
@@ -295,12 +390,9 @@ def lsh_bucketed_topk(
     JVM-fold re-rank, whose sim values are bit-identical to the
     all-pairs form."""
     buckets = _table_buckets_udf(dim, n_planes, n_tables)
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    ).cache()  # re-materialized by index/encode + the exact re-rank fetch
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
+    # re-materialized by index/encode + the exact re-rank fetch
+    c = _candidate_units(candidates, id_col, emb_col).cache()
+    q = _query_units(queries, id_col, emb_col)
     c_sig = c.select(
         "neighbor_id", F.posexplode(buckets("c_unit")).alias("table", "bucket")
     )
@@ -313,17 +405,7 @@ def lsh_bucketed_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_topk(cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id"), k)
 
 
 def cosine_near_pairs(
@@ -600,6 +682,17 @@ def _probe_cells_udf(centroids: list[list[float]], top: int):
     return _probe
 
 
+def _training_units(
+    candidates: DataFrame, emb_col: str, unit_df: DataFrame | None
+) -> DataFrame:
+    """The `unit` frame a trainer reads: the caller's pre-normalized
+    `unit_df` when given (the build steps pass their candidate unit
+    frame), else the candidates' own spread + normalize pass."""
+    if unit_df is not None:
+        return unit_df.select("unit")
+    return with_unit_vector(_spread(candidates), emb_col).select("unit")
+
+
 def train_ivf_centroids(
     candidates: DataFrame,
     n_cells: int = 16,
@@ -629,12 +722,9 @@ def train_ivf_centroids(
     bit-identical with or without it. When given, the caller owns the
     cache lifecycle."""
     own_cache = unit_df is None
+    c = _training_units(candidates, emb_col, unit_df)
     if own_cache:
-        c = with_unit_vector(_spread(candidates), emb_col).select(
-            F.col("unit")
-        ).cache()
-    else:
-        c = unit_df.select(F.col("unit"))
+        c = c.cache()
     c = _iteration_frame(c)
     centroids = _unit_centroids(dim, n_cells, seed)
     # dim sums as COLUMNS of one n_cells-group aggregate (not a
@@ -705,18 +795,17 @@ def ivf_topk(
     exact fold re-ranks only the approx-top refine·k per query. numpy
     and the sequential fold agree to ~1e-12 while neighbor sim gaps sit
     many orders above that, so the exact top-k always survives the
-    refine window; final sims and ranks still come from the exact fold.
-    Past the broadcast guard the original all-candidate exact scoring
-    runs (at that scale per-cell candidate lists are the real serving
-    shape anyway — see ivfpq_topk_pretrained)."""
+    refine window; final sims and ranks still come from the exact fold,
+    through the shared `_shortlist_rerank` tail. Past the broadcast
+    guard every probe-join survivor is scored exactly (at that scale
+    per-cell candidate lists are the real serving shape anyway — see
+    ivfpq_topk_pretrained)."""
     # ONE spread+normalize+cache per build (r17, guide §5) — the serve
-    # path needs this frame anyway (cell assignment + exact re-rank
-    # fetch); training reads the same units through it. Centroids are
+    # path needs this frame anyway (cell assignment + prescore or exact
+    # scoring); training reads the same units through it. Centroids are
     # bit-identical (same unit expression, order-independent DECIMAL
     # sums).
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    ).cache()
+    c = _candidate_units(candidates, id_col, emb_col).cache()
     if centroids is None:
         centroids = train_ivf_centroids(
             candidates, n_cells, n_iters, id_col, emb_col, dim,
@@ -724,9 +813,7 @@ def ivf_topk(
         )
     c_probe = _probe_cells_udf(centroids, top=n_assign)
     q_probe = _probe_cells_udf(centroids, top=nprobe)
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
+    q = _query_units(queries, id_col, emb_col)
     c_cells = c.select(
         "neighbor_id", F.explode(c_probe(F.col("c_unit"))).alias("cell")
     )
@@ -774,25 +861,10 @@ def ivf_topk(
         scored = cand.join(F.broadcast(q), "query_id").mapInArrow(
             _prescore, f"query_id {qid_t}, neighbor_id long, approx double"
         )
-        w0 = Window.partitionBy("query_id").orderBy(
-            F.col("approx").desc(), "neighbor_id"
+        return _shortlist_rerank(
+            scored, candidates, q, k, refine, id_col, emb_col, c=c
         )
-        cand = (
-            scored.withColumn("rk", F.row_number().over(w0))
-            .filter(F.col("rk") <= refine * k)
-            .select("query_id", "neighbor_id")
-        )
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_topk(cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id"), k)
 
 
 def centroids_to_json(centroids: list[list[float]]) -> str:
@@ -994,12 +1066,9 @@ def train_pq_codebooks(
         raise ValueError(f"dim ({dim}) must divide into m ({m}) subspaces")
     d_sub = dim // m
     own_cache = unit_df is None
+    u = _training_units(candidates, emb_col, unit_df)
     if own_cache:
-        u = with_unit_vector(_spread(candidates), emb_col).select(
-            "unit"
-        ).cache()
-    else:
-        u = unit_df.select("unit")
+        u = u.cache()
     u = _iteration_frame(u)
     books = _pq_init_codebooks(dim, m, k_codes, seed)
     sum_cols = [
@@ -1042,6 +1111,53 @@ def train_pq_codebooks(
     return books
 
 
+def _adc_scores(
+    pairs: DataFrame, q_rows: list, codebooks: list[list[list[float]]]
+) -> DataFrame:
+    """PQ asymmetric distance (ADC), shared by the PQ and IVF-PQ serve
+    steps: each query precomputes its m × k_codes dot-product table
+    T_q[s][code] = dot(q_sub_s, codeword), and approx(q, c) =
+    Σ_s T_q[s][code_s] is m table lookups per candidate, in one Arrow
+    pass over the codes. `pairs` is (query_id, qi, neighbor_id, codes)
+    with qi the query's position in `q_rows`; returns (query_id,
+    neighbor_id, approx)."""
+    from pyspark.sql.functions import pandas_udf
+
+    m, d_sub = len(codebooks), len(codebooks[0][0])
+    mats = [np.array(b) for b in codebooks]
+    tables = np.stack(
+        [
+            np.stack(
+                [
+                    mats[s] @ np.array(r["q_unit"][s * d_sub : (s + 1) * d_sub])
+                    for s in range(m)
+                ]
+            )
+            for r in q_rows
+        ]
+    )
+
+    @pandas_udf("double")
+    def adc(qis: pd.Series, codes: pd.Series) -> pd.Series:
+        cm = np.vstack(codes.to_numpy())
+        qv = qis.to_numpy()
+        out = np.empty(len(cm))
+        # group rows by query index so lookups stay vectorized per query
+        for qi in np.unique(qv):
+            sel = qv == qi
+            t = tables[int(qi)]
+            acc = np.zeros(sel.sum())
+            sub = cm[sel]
+            for s in range(m):
+                acc += t[s][sub[:, s]]
+            out[sel] = acc
+        return pd.Series(out)
+
+    return pairs.select(
+        "query_id", "neighbor_id", adc(F.col("qi"), F.col("codes")).alias("approx")
+    )
+
+
 def pq_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -1069,16 +1185,12 @@ def pq_topk(
     doubles) is a broadcast closure — PQ serves batched query sets, not
     one-off lookups. Deterministic end-to-end (md5 init, DECIMAL Lloyd,
     argmax ties to the lowest code index)."""
-    from pyspark.sql.functions import pandas_udf
-
     # ONE spread+normalize+cache per build (r17, guide §5): the serve
-    # path needs this frame anyway (encode pass + exact re-rank fetch),
-    # and training reads the same units through it instead of
-    # materializing its own copy — codebooks bit-identical (same unit
-    # expression, order-independent DECIMAL sums).
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    ).cache()
+    # path needs this frame anyway (the encode pass), and training reads
+    # the same units through it instead of materializing its own copy —
+    # codebooks bit-identical (same unit expression, order-independent
+    # DECIMAL sums).
+    c = _candidate_units(candidates, id_col, emb_col).cache()
     if codebooks is None:
         codebooks = train_pq_codebooks(
             candidates, m, k_codes, n_iters, emb_col, dim,
@@ -1086,75 +1198,159 @@ def pq_topk(
         )
     # supplied codebooks are the shape authority (m/k_codes params are
     # training knobs only) — see _pq_shape
-    m, k_codes, d_sub = _pq_shape(codebooks, dim)
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
+    _pq_shape(codebooks, dim)
+    coded = c.select(
+        "neighbor_id", _pq_encode_udf(codebooks)(F.col("c_unit")).alias("codes")
     )
-    q_rows = q.collect()  # |Q| is small by contract (batched query set)
-    if not q_rows:
-        return _empty_topk_result(q)
-    q_ids = [r["query_id"] for r in q_rows]
-    mats = [np.array(b) for b in codebooks]
-    # T[qi][s][code] = dot(q_sub, codeword)
-    tables = np.stack(
-        [
-            np.stack(
-                [
-                    mats[s] @ np.array(r["q_unit"][s * d_sub : (s + 1) * d_sub])
-                    for s in range(m)
-                ]
+
+    def serve(q: DataFrame, q_rows: list) -> DataFrame:
+        # every candidate pairs with every query; qi (the query's
+        # position in q_rows) indexes its ADC table
+        q_ids = F.array(*[F.lit(r["query_id"]) for r in q_rows])
+        pairs = coded.select(
+            "neighbor_id", "codes", F.posexplode(q_ids).alias("qi", "query_id")
+        ).filter(F.col("neighbor_id") != F.col("query_id"))
+        return _shortlist_rerank(
+            _adc_scores(pairs, q_rows, codebooks), candidates, q, k, refine,
+            id_col, emb_col, c=c,
+        )
+
+    return _serve_queries(queries, id_col, emb_col, serve)
+
+
+def _train_ivfpq(
+    candidates: DataFrame,
+    c: DataFrame,
+    centroids: list[list[float]] | None,
+    codebooks: list[list[list[float]]] | None,
+    n_cells: int,
+    m: int,
+    k_codes: int,
+    n_iters: int,
+    id_col: str,
+    emb_col: str,
+    dim: int,
+) -> tuple[list[list[float]], list[list[list[float]]]]:
+    """IVF-PQ build, training half: train whichever of the coarse
+    quantizer and the PQ codebooks is not supplied, both from the one
+    cached candidate unit frame `c`. The two trainings are INDEPENDENT
+    aggregate loops over that shared cache, so they run as concurrent
+    driver-submitted jobs: wall = max(ivf, pq) instead of the sum. Each
+    training's per-iteration arithmetic is untouched — same unit
+    expression, same order-independent DECIMAL sums, same sequential
+    iteration order within each trainer — so centroids AND codebooks are
+    bit-identical to the serial form (pinned by the pretrained-parity and
+    recall tests)."""
+    if centroids is not None and codebooks is not None:
+        return centroids, codebooks
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # the trainers' jobs carry the caller's job group, description and
+    # tags (so cancelJobGroup reaches them); a plain pool thread has none.
+    # With pinned threads off it hands the session back: no wrapper.
+    session = candidates.sparkSession
+    inherit = inheritable_thread_target(session)
+    if inherit is session:
+        inherit = lambda f: f  # noqa: E731
+    unit = c.select(F.col("c_unit").alias("unit"))
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fut_cent = (
+            pool.submit(
+                inherit(train_ivf_centroids),
+                candidates, n_cells, n_iters,
+                id_col, emb_col, dim, unit_df=unit,
             )
-            for r in q_rows
-        ]
-    )
+            if centroids is None
+            else None
+        )
+        fut_books = (
+            pool.submit(
+                inherit(train_pq_codebooks),
+                candidates, m, k_codes, n_iters, emb_col, dim,
+                unit_df=unit,
+            )
+            if codebooks is None
+            else None
+        )
+        if fut_cent is not None:
+            centroids = fut_cent.result()
+        if fut_books is not None:
+            codebooks = fut_books.result()
+    return centroids, codebooks
 
-    @pandas_udf("array<double>")
-    def adc(codes: pd.Series) -> pd.Series:
-        cm = np.vstack(codes.to_numpy())  # rows × m
-        rows = len(cm)
-        out = np.empty((rows, len(q_ids)))
-        for qi in range(len(q_ids)):
-            t = tables[qi]  # m × k_codes
-            acc = np.zeros(rows)
-            for s in range(m):
-                acc += t[s][cm[:, s]]
-            out[:, qi] = acc
-        return pd.Series(list(out))
 
+def _ivfpq_index(
+    c: DataFrame,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    n_assign: int,
+) -> DataFrame:
+    """IVF-PQ build, encoding half: the index rows (neighbor_id, codes,
+    cell) of a candidate unit frame — the m PQ codes, once per each of
+    the `n_assign` nearest coarse cells. `write_ivfpq_index` persists
+    these rows, `append_ivfpq_index` appends them and `ivfpq_topk`
+    serves them inline."""
     enc = _pq_encode_udf(codebooks)
-    coded = c.select("neighbor_id", enc(F.col("c_unit")).alias("codes"))
-    q_id_arr = F.array(*[F.lit(i) for i in q_ids])
-    scored = (
-        coded.select("neighbor_id", F.posexplode(adc(F.col("codes"))).alias("qi", "approx"))
-        .select(
-            F.element_at(q_id_arr, F.col("qi") + 1).alias("query_id"),
-            "neighbor_id",
-            "approx",
+    c_probe = _probe_cells_udf(centroids, top=n_assign)
+    return c.select(
+        "neighbor_id",
+        enc(F.col("c_unit")).alias("codes"),
+        F.explode(c_probe(F.col("c_unit"))).alias("cell"),
+    )
+
+
+def _ivfpq_serve(
+    index: DataFrame,
+    candidates: DataFrame,
+    queries: DataFrame,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    k: int,
+    id_col: str,
+    emb_col: str,
+    nprobe: int,
+    refine: int,
+    c: DataFrame | None = None,
+) -> DataFrame:
+    """IVF-PQ serve over index rows (neighbor_id, codes, cell), inline
+    or persisted, with an EXCHANGE-FREE candidate side: queries are
+    probed driver-side (`_probe_cells_np`, the same tie-breaks as the
+    build's `_probe_cells_udf`), their cells become a static
+    `cell IN (...)` filter on the index (partition pruning on a
+    `write_ivfpq_index` table), and the |Q|·nprobe (query_id, qi, cell)
+    rows broadcast-join it, so the code rows stream through the join with
+    no shuffle on the cell key (plan-guarded in tests/test_bucketed.py).
+    Multi-assignment duplicates collapse before the ADC; `c` is the
+    build's cached unit frame when serving inline (see
+    `_shortlist_rerank`)."""
+
+    def serve(q: DataFrame, q_rows: list) -> DataFrame:
+        q_units = np.vstack([np.array(r["q_unit"]) for r in q_rows])
+        probed = _probe_cells_np(q_units, centroids, top=nprobe)
+        q_cells = index.sparkSession.createDataFrame(
+            [
+                (r["query_id"], qi, int(cell))
+                for qi, (r, cells) in enumerate(zip(q_rows, probed))
+                for cell in cells
+            ],
+            ["query_id", "qi", "cell"],
         )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), "neighbor_id"
-    )
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    sims = (
-        shortlist.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
+        all_cells = sorted({int(cell) for cells in probed for cell in cells})
+        pairs = (
+            index.filter(F.col("cell").isin(all_cells))
+            .join(F.broadcast(q_cells), "cell")
+            .filter(F.col("neighbor_id") != F.col("query_id"))
+            .select("query_id", "qi", "neighbor_id", "codes")
+            .distinct()  # multi-assignment duplicates collapse pre-ADC
         )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+        return _shortlist_rerank(
+            _adc_scores(pairs, q_rows, codebooks), candidates, q, k, refine,
+            id_col, emb_col, c=c,
+        )
+
+    return _serve_queries(queries, id_col, emb_col, serve)
 
 
 def ivfpq_topk(
@@ -1176,158 +1372,31 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVF-PQ: the canonical 100 TB ANN composition (FAISS IVFPQ) — the
     coarse quantizer prunes WHICH vectors a query looks at
-    (nprobe/n_cells of the corpus, a cell-key equi-join), PQ codes
-    decide the ORDER cheaply (ADC table lookups over the m-byte code
-    artifact — the pruned scan never touches float vectors), and the
-    refine·k shortlist re-ranks by exact cosine over the survivors'
-    unit vectors only.
+    (nprobe/n_cells of the corpus), PQ codes decide the ORDER cheaply
+    (ADC table lookups over the m-byte code artifact — the pruned scan
+    never touches float vectors), and the refine·k shortlist re-ranks by
+    exact cosine over the survivors' vectors only.
 
-    Plan shape: candidates carry (cell, codes) — one Arrow pass each,
-    both artifacts persistable; the probe join is skinny (id, cell,
-    codes); ADC scores ride the same row; two windows (shortlist, final
-    rank). Both trainings inherit the DECIMAL-exact / md5-init
+    serve(build(candidates)): the build is `write_ivfpq_index`'s — one
+    cached unit frame read by both trainers, then the (neighbor_id,
+    codes, cell) index rows — and the serve is `ivfpq_topk_pretrained`'s
+    (`_ivfpq_serve`: driver-side query probe, broadcast cell join, ADC,
+    exact re-rank), so the two return the same rows under the same
+    artifacts. Both trainings inherit the DECIMAL-exact / md5-init
     determinism of their standalone forms, so results are bit-stable
     across partitionings. Pass pre-trained `centroids`/`codebooks` for
     the train-once/serve-many lifecycle."""
-    from pyspark.sql.functions import pandas_udf
-
-    # ONE spread+normalize+cache per build (r17, guide §5): serve +
-    # BOTH trainings read the same cached unit frame (previously three
-    # separate spread+normalize+cache materializations per build). And
-    # since the two trainings are INDEPENDENT aggregate loops over that
-    # shared cache, they run as concurrent driver-submitted jobs (guide
-    # §2.6 "overlap independent jobs"): wall = max(ivf, pq) instead of
-    # the sum. Each training's per-iteration arithmetic is untouched —
-    # same unit expression, same order-independent DECIMAL sums, same
-    # sequential iteration order within each trainer — so centroids AND
-    # codebooks are bit-identical to the serial form (pinned by the
-    # pretrained-parity and recall tests).
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    ).cache()
-    if centroids is None or codebooks is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        # the trainers' jobs carry the caller's job group, description and
-        # tags (so cancelJobGroup reaches them); a plain pool thread has none.
-        # With pinned threads off it hands the session back: no wrapper.
-        session = candidates.sparkSession
-        inherit = inheritable_thread_target(session)
-        if inherit is session:
-            inherit = lambda f: f  # noqa: E731
-        unit = c.select(F.col("c_unit").alias("unit"))
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_cent = (
-                pool.submit(
-                    inherit(train_ivf_centroids),
-                    candidates, n_cells, n_iters,
-                    id_col, emb_col, dim, unit_df=unit,
-                )
-                if centroids is None
-                else None
-            )
-            fut_books = (
-                pool.submit(
-                    inherit(train_pq_codebooks),
-                    candidates, m, k_codes, n_iters, emb_col, dim,
-                    unit_df=unit,
-                )
-                if codebooks is None
-                else None
-            )
-            if fut_cent is not None:
-                centroids = fut_cent.result()
-            if fut_books is not None:
-                codebooks = fut_books.result()
+    c = _candidate_units(candidates, id_col, emb_col).cache()
+    centroids, codebooks = _train_ivfpq(
+        candidates, c, centroids, codebooks, n_cells, m, k_codes, n_iters,
+        id_col, emb_col, dim,
+    )
     # supplied codebooks are the shape authority (m/k_codes params are
     # training knobs only) — see _pq_shape
-    m, k_codes, d_sub = _pq_shape(codebooks, dim)
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
-    q_rows = q.collect()  # |Q| small by contract (batched query set)
-    if not q_rows:
-        return _empty_topk_result(q)
-    q_ids = [r["query_id"] for r in q_rows]
-    mats = [np.array(b) for b in codebooks]
-    tables = np.stack(
-        [
-            np.stack(
-                [
-                    mats[s] @ np.array(r["q_unit"][s * d_sub : (s + 1) * d_sub])
-                    for s in range(m)
-                ]
-            )
-            for r in q_rows
-        ]
-    )
-    qi_of = {qid: i for i, qid in enumerate(q_ids)}
-
-    enc = _pq_encode_udf(codebooks)
-    c_probe = _probe_cells_udf(centroids, top=n_assign)
-    q_probe = _probe_cells_udf(centroids, top=nprobe)
-    # the persistable index rows: (id, cell, codes) — m ints + a cell id
-    c_index = c.select(
-        "neighbor_id",
-        F.explode(c_probe(F.col("c_unit"))).alias("cell"),
-        enc(F.col("c_unit")).alias("codes"),
-    )
-    q_cells = q.select(
-        "query_id", F.explode(q_probe(F.col("q_unit"))).alias("cell")
-    )
-
-    @pandas_udf("double")
-    def adc_one(qis: pd.Series, codes: pd.Series) -> pd.Series:
-        cm = np.vstack(codes.to_numpy())
-        qv = qis.to_numpy()
-        out = np.empty(len(cm))
-        # group rows by query index so lookups stay vectorized per query
-        for qi in np.unique(qv):
-            sel = qv == qi
-            t = tables[int(qi)]
-            acc = np.zeros(sel.sum())
-            sub = cm[sel]
-            for s in range(m):
-                acc += t[s][sub[:, s]]
-            out[sel] = acc
-        return pd.Series(out)
-
-    qi_map = F.create_map(
-        *[x for qid, i in qi_of.items() for x in (F.lit(qid), F.lit(i))]
-    )
-    pruned = (
-        c_index.join(q_cells, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "codes")
-        .distinct()  # multi-assignment duplicates collapse pre-ADC
-        .withColumn(
-            "approx",
-            adc_one(F.element_at(qi_map, F.col("query_id")), F.col("codes")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), "neighbor_id"
-    )
-    shortlist = (
-        pruned.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    sims = (
-        shortlist.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
+    _pq_shape(codebooks, dim)
+    return _ivfpq_serve(
+        _ivfpq_index(c, centroids, codebooks, n_assign), candidates, queries,
+        centroids, codebooks, k, id_col, emb_col, nprobe, refine, c=c,
     )
 
 
@@ -1366,7 +1435,7 @@ def _probe_cells_np(
 ) -> np.ndarray:
     """Driver-side mirror of `_probe_cells_udf`'s math (same column-
     reversed stable argsort → identical tie-breaks) for the |Q|-small
-    query side of pretrained serving: with the queries already collected
+    query side of IVF-PQ serving: with the queries already collected
     for the ADC tables, probing them in numpy avoids a whole Spark job
     and lets the probed cells become a STATIC partition filter on the
     index table (cells known at plan time → partition pruning, no DPP
@@ -1394,8 +1463,9 @@ def write_ivfpq_index(
     path: str | None = None,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Materialize the IVF-PQ candidate index as a CELL-PARTITIONED
-    catalog table — the serve-side half of train-once/serve-many that
-    `ivfpq_topk` computes inline on every call (r9 verdict #4).
+    catalog table — persist(build(candidates)), the build `ivfpq_topk`
+    runs inline on every call: one cached unit frame
+    read by both trainers (`_train_ivfpq`), then the `_ivfpq_index` rows.
 
     Each row is (neighbor_id, codes, cell): the m-byte PQ code plus the
     coarse cell, written `partitionBy("cell")` so a query's nprobe cells
@@ -1413,26 +1483,19 @@ def write_ivfpq_index(
     parquet until the refine·k·|Q| re-rank fetch. Mirrors the reference's
     write-once parquet artifacts (cmd/merge/transactions.go:214-231) at
     index granularity."""
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            candidates, n_cells, n_iters, id_col, emb_col, dim
+    c = _candidate_units(candidates, id_col, emb_col).cache()
+    try:
+        centroids, codebooks = _train_ivfpq(
+            candidates, c, centroids, codebooks, n_cells, m, k_codes,
+            n_iters, id_col, emb_col, dim,
         )
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            candidates, m, k_codes, n_iters, emb_col, dim
+        _pq_shape(codebooks, dim)
+        _overwrite_index_table(
+            _ivfpq_index(c, centroids, codebooks, n_assign), table,
+            path=path, partition_by="cell",
         )
-    _pq_shape(codebooks, dim)
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )
-    enc = _pq_encode_udf(codebooks)
-    c_probe = _probe_cells_udf(centroids, top=n_assign)
-    c_index = c.select(
-        "neighbor_id",
-        enc(F.col("c_unit")).alias("codes"),
-        F.explode(c_probe(F.col("c_unit"))).alias("cell"),
-    )
-    _overwrite_index_table(c_index, table, path=path, partition_by="cell")
+    finally:
+        c.unpersist()
     return centroids, codebooks
 
 
@@ -1506,15 +1569,9 @@ def append_ivfpq_index(
     `ivfpq_topk_pretrained` serves the union with no change. Mirrors the
     corpus-signature upsert contract (ml.prep) at index granularity."""
     _pq_shape(codebooks, dim)
-    c = with_unit_vector(_spread(new_candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )
-    enc = _pq_encode_udf(codebooks)
-    c_probe = _probe_cells_udf(centroids, top=n_assign)
-    c_index = c.select(
-        "neighbor_id",
-        enc(F.col("c_unit")).alias("codes"),
-        F.explode(c_probe(F.col("c_unit"))).alias("cell"),
+    c_index = _ivfpq_index(
+        _candidate_units(new_candidates, id_col, emb_col), centroids,
+        codebooks, n_assign,
     )
     # append matches columns BY NAME (saveAsTable semantics), so the
     # (neighbor_id, codes, cell) order stays aligned with the write path
@@ -1541,110 +1598,20 @@ def ivfpq_topk_pretrained(
     nprobe: int = 4,
     refine: int = 4,
 ) -> DataFrame:
-    """Serve IVF-PQ top-k from a `write_ivfpq_index` table with an
-    EXCHANGE-FREE candidate side: queries are probed driver-side
-    (`_probe_cells_np`, same tie-breaks as the write path), their cells
-    become a static `cell IN (...)` partition filter on the index scan,
-    and the |Q|·nprobe (query_id, cell) pairs broadcast-join the pruned
-    scan — the code artifact streams through the join with no shuffle
-    and no exchange (plan-guarded in tests/test_bucketed.py). ADC
-    ordering and the exact re-rank then match `ivfpq_topk` exactly; the
-    re-rank fetches shortlist units via broadcast semi-join against the
-    corpus, so vector parquet is touched only for refine·k·|Q| rows."""
-    from pyspark.sql.functions import pandas_udf
-
-    m, k_codes, d_sub = _pq_shape(codebooks, dim)
+    """Serve IVF-PQ top-k from a `write_ivfpq_index` table:
+    serve(spark.table(index_table)) through `_ivfpq_serve`, the serve
+    step `ivfpq_topk` runs on its inline index rows, so both return the
+    same rows under the same artifacts. The probed cells prune the
+    cell-partitioned scan to nprobe/n_cells of the files, and the
+    re-rank touches vector parquet only for refine·k·|Q| rows."""
+    _pq_shape(codebooks, dim)
     # refresh the index relation: appends land from OTHER sessions (the
     # streaming gate's cloned session, another writer process), and a
     # cached file listing would silently serve the pre-append index
     spark.catalog.refreshTable(index_table)
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
-    q_rows = q.collect()  # |Q| small by contract (batched query set)
-    if not q_rows:
-        return _empty_topk_result(q)
-    q_ids = [r["query_id"] for r in q_rows]
-    q_units = np.vstack([np.array(r["q_unit"]) for r in q_rows])
-    mats = [np.array(b) for b in codebooks]
-    tables = np.stack(
-        [
-            np.stack(
-                [mats[s] @ q_units[i, s * d_sub : (s + 1) * d_sub] for s in range(m)]
-            )
-            for i in range(len(q_ids))
-        ]
-    )
-    qi_of = {qid: i for i, qid in enumerate(q_ids)}
-
-    probed = _probe_cells_np(q_units, centroids, top=nprobe)
-    q_cells = spark.createDataFrame(
-        [
-            (qid, int(cell))
-            for qid, cells in zip(q_ids, probed)
-            for cell in cells
-        ],
-        ["query_id", "cell"],
-    )
-
-    @pandas_udf("double")
-    def adc_one(qis: pd.Series, codes: pd.Series) -> pd.Series:
-        cm = np.vstack(codes.to_numpy())
-        qv = qis.to_numpy()
-        out = np.empty(len(cm))
-        for qi in np.unique(qv):
-            sel = qv == qi
-            t = tables[int(qi)]
-            acc = np.zeros(sel.sum())
-            sub = cm[sel]
-            for s in range(m):
-                acc += t[s][sub[:, s]]
-            out[sel] = acc
-        return pd.Series(out)
-
-    all_cells = sorted({int(cell) for cells in probed for cell in cells})
-    idx = spark.table(index_table).filter(F.col("cell").isin(all_cells))
-    qi_map = F.create_map(
-        *[x for qid, i in qi_of.items() for x in (F.lit(qid), F.lit(i))]
-    )
-    pruned = (
-        idx.join(F.broadcast(q_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "codes")
-        .distinct()  # multi-assignment duplicates collapse pre-ADC
-        .withColumn(
-            "approx",
-            adc_one(F.element_at(qi_map, F.col("query_id")), F.col("codes")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), "neighbor_id"
-    )
-    shortlist = (
-        pruned.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    # fetch BEFORE normalizing: the broadcast semi-join prunes the corpus
-    # to refine*k*|Q| rows first, so the exact norm/dot fold (the ~ms-per-
-    # row interpreted path) never touches non-shortlist vectors
-    fetched = candidates.select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("__emb")
-    ).join(F.broadcast(shortlist), "neighbor_id")
-    sims = (
-        with_unit_vector(fetched, "__emb")
-        .withColumnRenamed("unit", "c_unit")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
+    return _ivfpq_serve(
+        spark.table(index_table), candidates, queries, centroids, codebooks,
+        k, id_col, emb_col, nprobe, refine,
     )
 
 
@@ -1655,63 +1622,44 @@ def ivfpq_topk_pretrained(
 # ---------------------------------------------------------------------------
 
 
-def _prescore_shortlist_rerank(
-    candidates: DataFrame,
-    q: DataFrame,
+def _code_serve(
     coded: DataFrame,
-    score_exprs: list[Column],
-    q_ids: list,
-    ascending: bool,
-    refine: int,
+    candidates: DataFrame,
+    queries: DataFrame,
+    score_exprs: Callable[[list], list[Column]],
     k: int,
+    refine: int,
     id_col: str,
     emb_col: str,
+    ascending: bool,
 ) -> DataFrame:
-    """Shared tail of the pure-codegen quantized ANN rungs (SQ8, BQ):
-    posexplode the per-query prescore expressions over the code scan,
-    window the refine*k shortlist per query (ascending for distances,
-    descending for similarities; neighbor_id tiebreak), then re-fetch
-    raw vectors for the SHORTLIST ONLY and re-rank by exact cosine --
-    the fp-parity-critical piece, audited in one place (same tail shape
-    as ivfpq_topk_pretrained)."""
-    q_id_arr = F.array(*[F.lit(i) for i in q_ids])
-    relabeled = (
-        coded.select(
-            "neighbor_id",
-            F.posexplode(F.array(*score_exprs)).alias("qi", "approx"),
+    """Serve step of the pure-codegen quantized rungs (SQ8, BQ) over
+    code rows, inline or persisted: `score_exprs(q_rows)` gives one
+    prescore expression per query over the code columns (an SQ8
+    similarity or a BQ Hamming distance, hence `ascending`); they are
+    posexploded over the code scan into (query_id, neighbor_id, approx)
+    rows — whole-stage codegen, no Python round-trip — and handed to
+    `_shortlist_rerank`."""
+
+    def serve(q: DataFrame, q_rows: list) -> DataFrame:
+        q_id_arr = F.array(*[F.lit(r["query_id"]) for r in q_rows])
+        scored = (
+            coded.select(
+                "neighbor_id",
+                F.posexplode(F.array(*score_exprs(q_rows))).alias("qi", "approx"),
+            )
+            .select(
+                F.element_at(q_id_arr, F.col("qi") + 1).alias("query_id"),
+                "neighbor_id",
+                "approx",
+            )
+            .filter(F.col("neighbor_id") != F.col("query_id"))
         )
-        .select(
-            F.element_at(q_id_arr, F.col("qi") + 1).alias("query_id"),
-            "neighbor_id",
-            "approx",
+        return _shortlist_rerank(
+            scored, candidates, q, k, refine, id_col, emb_col, ascending
         )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    order = F.col("approx").asc() if ascending else F.col("approx").desc()
-    w_short = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
-    shortlist = (
-        relabeled.withColumn("rk", F.row_number().over(w_short))
-        .filter(F.col("rk") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    fetched = candidates.select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("__emb")
-    ).join(F.broadcast(shortlist), "neighbor_id")
-    sims = (
-        with_unit_vector(fetched, "__emb")
-        .withColumnRenamed("unit", "c_unit")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("q_unit"), F.col("c_unit")).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+
+    return _serve_queries(queries, id_col, emb_col, serve)
 
 
 def train_sq8_bounds(
@@ -1728,11 +1676,7 @@ def train_sq8_bounds(
     Returns [lo_list, hi_list]. ``unit_df``: caller-owned pre-normalized
     `unit` frame — see `train_ivf_centroids`; min/max are order-free, so
     bounds are bit-identical either way."""
-    c = (
-        unit_df
-        if unit_df is not None
-        else with_unit_vector(_spread(candidates), emb_col)
-    )
+    c = _training_units(candidates, emb_col, unit_df)
     u = F.col("unit")
     aggs = []
     for d in range(dim):
@@ -1810,33 +1754,14 @@ def sq8_topk(
     refine·k shortlist re-ranks by exact cosine so the final (sim, rank)
     are bit-identical to what `cosine_topk` would emit for those pairs.
     Degenerate dimensions (hi == lo) encode to code 0 and decode exactly
-    to lo, contributing the exact constant q_d·lo_d via the bias term."""
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )
-    if bounds is None:
-        # share the serve frame's unit plan (r17): one _spread probe per
-        # build, identical min/max fold — bounds bit-identical
-        bounds = train_sq8_bounds(
-            candidates, emb_col, dim,
-            unit_df=c.select(F.col("c_unit").alias("unit")),
-        )
-    _sq8_check_bounds(bounds, dim)
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
-    q_rows = q.collect()  # |Q| is small by contract (batched query set)
-    if not q_rows:
-        return _empty_topk_result(q)
-
-    coded = c.select(
-        "neighbor_id", _sq8_codes_expr(F.col("c_unit"), bounds).alias("codes")
-    )
-    q_ids, score_exprs = _sq8_score_exprs(q_rows, bounds, dim)
-
-    return _prescore_shortlist_rerank(
-        candidates, q, coded, score_exprs, q_ids,
-        ascending=False, refine=refine, k=k, id_col=id_col, emb_col=emb_col,
+    to lo, contributing the exact constant q_d·lo_d via the bias term.
+    serve(build(candidates)), the same two steps as
+    `sq8_topk_pretrained` over the persisted codes."""
+    coded, bounds = _sq8_build(candidates, id_col, emb_col, dim, bounds)
+    return _code_serve(
+        coded, candidates, queries,
+        lambda q_rows: _sq8_score_exprs(q_rows, bounds, dim),
+        k, refine, id_col, emb_col, ascending=False,
     )
 
 
@@ -1848,37 +1773,51 @@ def _sq8_check_bounds(bounds: list[list[float]], dim: int) -> None:
         )
 
 
-def _sq8_codes_expr(unit_col: Column, bounds: list[list[float]]) -> Column:
-    """The SQ8 encode as one pure-Catalyst expression over a unit-vector
-    column: code_d = clamp(floor((x_d − lo_d)·255/(hi_d − lo_d)), 0, 255).
-    Shared verbatim by the inline rung (sq8_topk), the index writer and
-    the appender, so persisted codes are bit-identical to what the
-    inline path would compute."""
+def _sq8_build(
+    candidates: DataFrame,
+    id_col: str,
+    emb_col: str,
+    dim: int,
+    bounds: list[list[float]] | None,
+) -> tuple[DataFrame, list[list[float]]]:
+    """SQ8 build: the code rows (neighbor_id, codes) that `sq8_topk`
+    serves, `write_sq8_index` persists and `append_sq8_index` appends,
+    and the bounds they were encoded under — trained from the same unit
+    frame when not supplied (one _spread probe per build; min/max are
+    order-free, so the bounds are bit-identical either way). The encode
+    is one pure-Catalyst expression: code_d = clamp(floor((x_d − lo_d)·
+    255/(hi_d − lo_d)), 0, 255)."""
+    c = _candidate_units(candidates, id_col, emb_col)
+    if bounds is None:
+        bounds = train_sq8_bounds(
+            candidates, emb_col, dim,
+            unit_df=c.select(F.col("c_unit").alias("unit")),
+        )
+    _sq8_check_bounds(bounds, dim)
     lo, hi = bounds
     inv = [255.0 / (h - l) if h > l else 0.0 for l, h in zip(lo, hi)]
     lo_arr = F.array(*[F.lit(v) for v in lo])
     inv_arr = F.array(*[F.lit(v) for v in inv])
-    return F.zip_with(
-        F.zip_with(unit_col, lo_arr, lambda x, l: x - l),
+    codes = F.zip_with(
+        F.zip_with(F.col("c_unit"), lo_arr, lambda x, l: x - l),
         inv_arr,
         lambda x, s: F.least(
             F.greatest(F.floor(x * s), F.lit(0)), F.lit(255)
         ).cast("int"),
     )
+    return c.select("neighbor_id", codes.alias("codes")), bounds
 
 
 def _sq8_score_exprs(
     q_rows: list, bounds: list[list[float]], dim: int
-) -> tuple[list, list[Column]]:
+) -> list[Column]:
     """Per-query asymmetric-distance score expressions over a `codes`
     column: approx = bias_q + Σ_d q_d·Δ_d·code_d (query full precision,
     candidate decoded from its uint8 grid point)."""
     lo, hi = bounds
     delta = [(h - l) / 255.0 if h > l else 0.0 for l, h in zip(lo, hi)]
     score_exprs: list[Column] = []
-    q_ids = []
     for r in q_rows:
-        q_ids.append(r["query_id"])
         u = r["q_unit"]
         bias = sum(u[d] * lo[d] for d in range(dim))
         w = [u[d] * delta[d] for d in range(dim)]
@@ -1893,7 +1832,7 @@ def _sq8_score_exprs(
                 lambda acc, v: acc + v,
             )
         )
-    return q_ids, score_exprs
+    return score_exprs
 
 
 def write_sq8_index(
@@ -1917,15 +1856,7 @@ def write_sq8_index(
     reduction over float64 parquet), and the scan stays inside
     whole-stage codegen with zero Python round-trip. Returns the bounds
     actually used (trained here when not supplied)."""
-    if bounds is None:
-        bounds = train_sq8_bounds(candidates, emb_col, dim)
-    _sq8_check_bounds(bounds, dim)
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )
-    coded = c.select(
-        "neighbor_id", _sq8_codes_expr(F.col("c_unit"), bounds).alias("codes")
-    )
+    coded, bounds = _sq8_build(candidates, id_col, emb_col, dim, bounds)
     _overwrite_index_table(coded, table, path=path)
     return bounds
 
@@ -1942,13 +1873,7 @@ def append_sq8_index(
     the SAME persisted bounds (codes are only comparable within one
     bounds generation — retraining means rebuilding, exactly as with PQ
     codebooks). Append-only: existing files are never rewritten."""
-    _sq8_check_bounds(bounds, dim)
-    c = with_unit_vector(_spread(new_candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )
-    coded = c.select(
-        "neighbor_id", _sq8_codes_expr(F.col("c_unit"), bounds).alias("codes")
-    )
+    coded, _ = _sq8_build(new_candidates, id_col, emb_col, dim, bounds)
     coded.write.mode("append").format("parquet").saveAsTable(table)
     new_candidates.sparkSession.catalog.refreshTable(table)
 
@@ -1968,10 +1893,9 @@ def sq8_topk_pretrained(
     """Serve SQ8 top-k from a `write_sq8_index` table: the prescore scan
     reads ONLY the persisted dim-byte codes (pure Catalyst, whole-stage
     codegen — no encode work per query batch), and the refine·k
-    shortlist re-ranks by exact cosine against the corpus, so the
-    result is bit-identical to `sq8_topk(candidates, queries,
-    bounds=bounds)` — the score expressions and the re-rank tail are
-    the same code objects."""
+    shortlist re-ranks by exact cosine against the corpus. The serve
+    step is `sq8_topk`'s, so the result is bit-identical to
+    `sq8_topk(candidates, queries, bounds=bounds)`."""
     _sq8_check_bounds(bounds, dim)
     # appends land from other sessions; a cached file listing would
     # silently serve the pre-append index (same as ivfpq_topk_pretrained)
@@ -1987,17 +1911,10 @@ def sq8_topk_pretrained(
             f"dim={dim} but {index_table} holds {head[0]['n']}-byte codes "
             f"— the table was built at a different dim"
         )
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
-    q_rows = q.collect()  # |Q| small by contract
-    if not q_rows:
-        return _empty_topk_result(q)
-    q_ids, score_exprs = _sq8_score_exprs(q_rows, bounds, dim)
-    coded = spark.table(index_table)
-    return _prescore_shortlist_rerank(
-        candidates, q, coded, score_exprs, q_ids,
-        ascending=False, refine=refine, k=k, id_col=id_col, emb_col=emb_col,
+    return _code_serve(
+        spark.table(index_table), candidates, queries,
+        lambda q_rows: _sq8_score_exprs(q_rows, bounds, dim),
+        k, refine, id_col, emb_col, ascending=False,
     )
 
 
@@ -2039,35 +1956,28 @@ def bq_topk(
     Everything JVM-side: encode is a zip_with/bitwiseOR fold (OR of
     distinct powers of two — no additive overflow, ANSI-safe), the
     prescore is bit_count(code XOR lit) — whole-stage codegen
-    end-to-end, like sq8_topk and unlike the Arrow-batched PQ rungs."""
+    end-to-end, like sq8_topk and unlike the Arrow-batched PQ rungs.
+    serve(build(candidates)), the same two steps as `bq_topk_pretrained`
+    over the persisted words."""
+    return _code_serve(
+        _bq_build(candidates, id_col, emb_col, dim), candidates, queries,
+        lambda q_rows: _bq_ham_exprs(q_rows, dim),
+        k, refine, id_col, emb_col, ascending=True,
+    )
+
+
+def _bq_build(
+    candidates: DataFrame, id_col: str, emb_col: str, dim: int
+) -> DataFrame:
+    """BQ build: the code rows (neighbor_id, w0..w{n-1}) that `bq_topk`
+    serves, `write_bq_index` persists and `append_bq_index` appends.
+    Each BIGINT word ORs together its dimensions' sign bits as one
+    pure-Catalyst fold (OR of distinct powers of two — no additive
+    overflow, ANSI-safe)."""
     if dim < 1:
         raise ValueError(f"dim must be >= 1, got {dim}")
-
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
-    q_rows = q.collect()  # |Q| is small by contract (batched query set)
-    if not q_rows:
-        return _empty_topk_result(q)
-
-    coded = c.select("neighbor_id", *_bq_word_exprs(F.col("c_unit"), dim))
-    q_ids, ham_exprs = _bq_ham_exprs(q_rows, dim)
-
-    return _prescore_shortlist_rerank(
-        candidates, q, coded, ham_exprs, q_ids,
-        ascending=True, refine=refine, k=k, id_col=id_col, emb_col=emb_col,
-    )
-
-
-def _bq_word_exprs(unit_col: Column, dim: int) -> list[Column]:
-    """The BQ encode as pure-Catalyst word columns w0..w{n-1}: each
-    BIGINT word ORs together the per-dimension sign bits (OR of distinct
-    powers of two — no additive overflow, ANSI-safe). Shared verbatim by
-    the inline rung, the index writer and the appender."""
     n_words = (dim + 63) // 64
+    unit_col = F.col("c_unit")
 
     def word_expr(w: int) -> Column:
         lo, hi = w * 64, min((w + 1) * 64, dim)
@@ -2084,10 +1994,24 @@ def _bq_word_exprs(unit_col: Column, dim: int) -> list[Column]:
             lambda acc, v: acc.bitwiseOR(v),
         )
 
-    return [word_expr(w).alias(f"w{w}") for w in range(n_words)]
+    return _candidate_units(candidates, id_col, emb_col).select(
+        "neighbor_id", *[word_expr(w).alias(f"w{w}") for w in range(n_words)]
+    )
 
 
-def _bq_ham_exprs(q_rows: list, dim: int) -> tuple[list, list[Column]]:
+def _bq_check_table(spark: SparkSession, table: str, dim: int) -> None:
+    """The dim contract of a persisted BQ table (r12 advice): Hamming
+    over a word prefix of a wider table is silently wrong, not slow."""
+    n_words = (dim + 63) // 64
+    existing = len(spark.table(table).columns) - 1
+    if existing != n_words:
+        raise ValueError(
+            f"dim={dim} implies {n_words} sign words but {table} has "
+            f"{existing} — the table was built at a different dim"
+        )
+
+
+def _bq_ham_exprs(q_rows: list, dim: int) -> list[Column]:
     """Per-query Hamming-distance expressions over the persisted word
     columns: Σ_w bit_count(w XOR q_word_w)."""
     n_words = (dim + 63) // 64
@@ -2103,9 +2027,7 @@ def _bq_ham_exprs(q_rows: list, dim: int) -> tuple[list, list[Column]]:
         return words
 
     ham_exprs: list[Column] = []
-    q_ids = []
     for r in q_rows:
-        q_ids.append(r["query_id"])
         words = py_words(r["q_unit"])
         ham = None
         for w in range(n_words):
@@ -2114,7 +2036,7 @@ def _bq_ham_exprs(q_rows: list, dim: int) -> tuple[list, list[Column]]:
             )
             ham = term if ham is None else ham + term
         ham_exprs.append(ham)
-    return q_ids, ham_exprs
+    return ham_exprs
 
 
 def write_bq_index(
@@ -2135,13 +2057,9 @@ def write_bq_index(
     the Hamming prescore scans only this table (bit_count(XOR), whole-
     stage codegen); vector parquet is touched only for the refine·k·|Q|
     exact re-rank."""
-    if dim < 1:
-        raise ValueError(f"dim must be >= 1, got {dim}")
-    c = with_unit_vector(_spread(candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
+    _overwrite_index_table(
+        _bq_build(candidates, id_col, emb_col, dim), table, path=path
     )
-    coded = c.select("neighbor_id", *_bq_word_exprs(F.col("c_unit"), dim))
-    _overwrite_index_table(coded, table, path=path)
 
 
 def append_bq_index(
@@ -2154,18 +2072,9 @@ def append_bq_index(
     """Append newly-arrived vectors to a `write_bq_index` table. No
     trained state, so append is always valid (the only contract is the
     dim, checked against the table's word count)."""
-    n_words = (dim + 63) // 64
     spark = new_candidates.sparkSession
-    existing = len(spark.table(table).columns) - 1
-    if existing != n_words:
-        raise ValueError(
-            f"dim={dim} implies {n_words} sign words but {table} has "
-            f"{existing} — the table was built at a different dim"
-        )
-    c = with_unit_vector(_spread(new_candidates), emb_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("unit").alias("c_unit")
-    )
-    coded = c.select("neighbor_id", *_bq_word_exprs(F.col("c_unit"), dim))
+    _bq_check_table(spark, table, dim)
+    coded = _bq_build(new_candidates, id_col, emb_col, dim)
     coded.write.mode("append").format("parquet").saveAsTable(table)
     spark.catalog.refreshTable(table)
 
@@ -2184,27 +2093,12 @@ def bq_topk_pretrained(
     """Serve BQ top-k from a `write_bq_index` table: the Hamming
     prescore scans only the persisted sign words, the refine·k
     shortlist re-ranks by exact cosine against the corpus — bit-
-    identical to `bq_topk(candidates, queries)` because the Hamming
-    expressions and re-rank tail are the same code objects."""
+    identical to `bq_topk(candidates, queries)` because the serve step
+    is the same."""
     spark.catalog.refreshTable(index_table)
-    # Same dim-contract guard as append_bq_index (r12 advice): Hamming
-    # over a word prefix of a wider table is silently wrong, not slow.
-    n_words = (dim + 63) // 64
-    existing = len(spark.table(index_table).columns) - 1
-    if existing != n_words:
-        raise ValueError(
-            f"dim={dim} implies {n_words} sign words but {index_table} has "
-            f"{existing} — the table was built at a different dim"
-        )
-    q = with_unit_vector(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), F.col("unit").alias("q_unit")
-    )
-    q_rows = q.collect()  # |Q| small by contract
-    if not q_rows:
-        return _empty_topk_result(q)
-    q_ids, ham_exprs = _bq_ham_exprs(q_rows, dim)
-    coded = spark.table(index_table)
-    return _prescore_shortlist_rerank(
-        candidates, q, coded, ham_exprs, q_ids,
-        ascending=True, refine=refine, k=k, id_col=id_col, emb_col=emb_col,
+    _bq_check_table(spark, index_table, dim)
+    return _code_serve(
+        spark.table(index_table), candidates, queries,
+        lambda q_rows: _bq_ham_exprs(q_rows, dim),
+        k, refine, id_col, emb_col, ascending=True,
     )

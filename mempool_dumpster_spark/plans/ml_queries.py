@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mempool_dumpster_spark.ml.dedup import duplicate_components, exact_dedup
-from mempool_dumpster_spark.ml.similarity import ivf_topk, lsh_bucketed_topk
+from mempool_dumpster_spark.ml.similarity import dot, ivf_topk, lsh_bucketed_topk
 from mempool_dumpster_spark.ml.text import DEFAULT_LANG_PROFILES, language_id
 from mempool_dumpster_spark.plans.registry import register
 from mempool_dumpster_spark.plans.tables import load_tables
@@ -1916,9 +1916,6 @@ def media_frame_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = resized.select(
         F.col("media_id").alias("frame_id"), emb.alias("emb")
     )
-    dot = lambda u, v: F.aggregate(  # noqa: E731 — emb_knn's exact fold
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     from pyspark.sql import Window
 
     vecs = vecs.withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
@@ -2057,9 +2054,6 @@ def audio_clip_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vecs = pcm_segment_profile(media, n_segments=8).select(
         F.col("media_id").alias("clip_id"), F.col("profile").alias("emb")
-    )
-    dot = lambda u, v: F.aggregate(  # noqa: E731 — emb_knn's exact fold
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
     from pyspark.sql import Window
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mempool_dumpster_spark.ml.similarity import cosine_near_pairs, dot_sql
+from mempool_dumpster_spark.ml.similarity import cosine_near_pairs, dot, dot_sql
 from mempool_dumpster_spark.plans.registry import register
 from mempool_dumpster_spark.plans.tables import load_tables, scan_spread_hint
 
@@ -888,9 +888,6 @@ def emb_near_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     e = emb.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-    dot = lambda u, v: F.aggregate(
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
     n = e.withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb")))).cache()
     a = n.select(

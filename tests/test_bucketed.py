@@ -670,6 +670,9 @@ def test_ivfpq_index_table_serves_without_candidate_exchange(spark, tmp_path):
         emb, q, k=3, dim=8, nprobe=2, n_assign=2, refine=4,
         centroids=cents, codebooks=books,
     )
+    # the inline rung serves through the same broadcast, driver-probed path
+    inline_plan = _plan(inline)
+    assert "Exchange hashpartitioning(cell" not in inline_plan, inline_plan
     got = sorted(map(tuple, served.collect()))
     want = sorted(map(tuple, inline.collect()))
     assert got == want and got

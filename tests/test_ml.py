@@ -647,6 +647,22 @@ def test_ivf_deterministic_centroids(vectors):
     assert c1 == c2
 
 
+def test_ivf_topk_past_broadcast_guard_matches_default(vectors):
+    """ivf_topk past its broadcast guard (broadcast_bytes=0) scores every
+    probe-join survivor exactly; the default prescores them and re-ranks
+    only each query's refine·k best. The exact top-k always survives
+    that window, so both branches return identical rows. nprobe covers
+    every cell, so each query has more survivors than the window keeps."""
+    queries = vectors.filter(F.col("vec_id") < 3)
+    cents = train_ivf_centroids(vectors, n_cells=4, n_iters=2, dim=8)
+    kw = dict(k=3, dim=8, n_cells=4, nprobe=4, centroids=cents)
+    default = sorted(map(tuple, ivf_topk(vectors, queries, **kw).collect()))
+    over_guard = sorted(
+        map(tuple, ivf_topk(vectors, queries, broadcast_bytes=0, **kw).collect())
+    )
+    assert over_guard == default and len(default) == 9
+
+
 def test_ivf_ann_recall_on_testdata(spark):
     """Recall@3 of the registered emb_knn_ivf parameters vs the exact path
     on the driver's sf0.01 embeddings — must stay ≥ 0.9 (measured 0.967 at
@@ -2803,23 +2819,53 @@ def test_pq_codebook_roundtrip_and_reuse(spark, vectors):
         pq_codebooks_from_json('{"format": "nope"}')
 
 
-def test_pq_topk_empty_queries_and_shape_validation(spark, vectors):
+def test_pq_topk_empty_queries_and_shape_validation(spark, vectors, tmp_path):
     """Review regressions (r9 advisory): (a) an EMPTY query set used to
-    crash np.stack with 'need at least one array to stack' — must return
-    an empty frame with the standard top-k schema; (b) supplied codebooks
-    are the shape authority — a caller m/k_codes that disagrees used to
-    mis-slice the ADC query subranges and silently degrade recall; now
-    the shape is derived from the codebooks and a dim mismatch raises."""
+    crash np.stack with 'need at least one array to stack' — every
+    query-collecting rung, inline or served from a written index, must
+    return an empty frame with the standard top-k schema; (b) supplied
+    codebooks are the shape authority — a caller m/k_codes that
+    disagrees used to mis-slice the ADC query subranges and silently
+    degrade recall; now the shape is derived from the codebooks and a
+    dim mismatch raises."""
     from mempool_dumpster_spark.ml.similarity import (
+        bq_topk,
+        bq_topk_pretrained,
         ivfpq_topk,
+        ivfpq_topk_pretrained,
         pq_topk,
+        sq8_topk,
+        sq8_topk_pretrained,
         train_pq_codebooks,
+        write_bq_index,
+        write_ivfpq_index,
+        write_sq8_index,
     )
 
     books = train_pq_codebooks(vectors, m=4, k_codes=8, n_iters=1, dim=8)
     empty_q = vectors.filter(F.col("vec_id") < 0)
-    for fn in (pq_topk, ivfpq_topk):
-        out = fn(vectors, empty_q, k=3, dim=8, codebooks=books)
+    cents, _ = write_ivfpq_index(
+        vectors, "empty_q_ivfpq", dim=8, n_cells=4, n_iters=1,
+        codebooks=books, path=str(tmp_path / "ivfpq"),
+    )
+    bounds = write_sq8_index(
+        vectors, "empty_q_sq8", dim=8, path=str(tmp_path / "sq8")
+    )
+    write_bq_index(vectors, "empty_q_bq", dim=8, path=str(tmp_path / "bq"))
+    for out in (
+        pq_topk(vectors, empty_q, k=3, dim=8, codebooks=books),
+        ivfpq_topk(vectors, empty_q, k=3, dim=8, codebooks=books),
+        sq8_topk(vectors, empty_q, k=3, dim=8),
+        bq_topk(vectors, empty_q, k=3, dim=8),
+        ivfpq_topk_pretrained(
+            spark, "empty_q_ivfpq", vectors, empty_q, cents, books,
+            k=3, dim=8,
+        ),
+        sq8_topk_pretrained(
+            spark, "empty_q_sq8", vectors, empty_q, bounds, k=3, dim=8
+        ),
+        bq_topk_pretrained(spark, "empty_q_bq", vectors, empty_q, k=3, dim=8),
+    ):
         assert out.columns == ["query_id", "neighbor_id", "sim", "rank"]
         assert out.count() == 0
 
