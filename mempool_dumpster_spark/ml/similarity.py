@@ -1,7 +1,11 @@
 """Similarity search over embedding columns (`array<float>`).
 
 Tiers (compose freely; all trainings are deterministic — md5 init,
-DECIMAL-exact Lloyd — so indexes are bit-stable across partitionings):
+DECIMAL-exact Lloyd — so indexes are bit-stable across partitionings;
+each k-means training is ONE collect of its unit vectors, capped at
+`_TRAIN_MAX_ROWS` rows by a deterministic hash sample, then every Lloyd
+round on the driver in numpy, so its Spark jobs do not grow with the
+iteration count):
 - `cosine_topk` — brute-force exact baseline: broadcast query set × full
   scan, JVM-side zip_with/aggregate dot products, per-query top-k window.
   Right whenever the query set is small (the scan is one pass regardless).
@@ -15,11 +19,12 @@ DECIMAL-exact Lloyd — so indexes are bit-stable across partitionings):
   probes only its `nprobe` nearest cells, then exact cosine re-rank. The
   classic ANN scale shape (FAISS IVF-Flat): candidate work per query is
   ~nprobe/n_cells of the corpus, and the probe is a cell-key equi-join —
-  shuffle ∝ rows, never |Q|×|C|. Training is Lloyd iterations with
-  DECIMAL-exact per-cell sums (order-independent → deterministic centroids
-  for a fixed seed, no RNG and no fp-association drift), and the centroid
-  table (n_cells × dim floats) is driver-resident/broadcast — the same
-  "train small, index big" split real IVF systems use.
+  shuffle ∝ rows, never |Q|×|C|. Training is Lloyd iterations on the
+  driver with DECIMAL-exact per-cell sums (order-independent →
+  deterministic centroids for a fixed seed, no RNG and no
+  fp-association drift), and the centroid table (n_cells × dim floats)
+  is driver-resident/broadcast — the same "train small, index big"
+  split real IVF systems use.
 - `pq_topk` — product quantization (ADC): vectors compress to m sub-codes
   (16 bytes vs 256 at the default config) and the scan ranks candidates
   by per-query table lookups over the CODE artifact — the float vectors
@@ -144,34 +149,6 @@ def _pq_shape(
             "for a different vector width"
         )
     return m, k_codes, d_sub
-
-
-#: target rows per task for the Lloyd ITERATION passes — vectorized
-#: numpy assignment costs ~µs/row, so a task under ~64k rows (≈32 MB of
-#: dim-64 doubles) is dominated by fixed task+Arrow overhead, not work.
-#: Distinct from _spread's concern (the 1.5 ms/row normalize fold wants
-#: every core): the normalize materializes the cache ONCE at full width;
-#: the per-iteration reads coalesce to this density.
-_ITER_ROWS_PER_TASK = 65536
-
-
-def _iteration_frame(c: DataFrame) -> DataFrame:
-    """Training-loop view of the cached unit frame: coalesced (never
-    shuffled, never widened) so each Lloyd job runs tasks sized by DATA
-    instead of one per cache partition. A no-op whenever the input is
-    big enough to fill its partitions (rows/partitions ≥ the target) —
-    i.e. at scale nothing changes; at bench scale the 32 near-empty
-    pandas-UDF tasks per iteration collapse to a few (measured 0.81 →
-    0.52 s per iteration at 5k vectors). Coalesce only re-groups rows,
-    and both the row-local assignment and the DECIMAL(38,18) sums are
-    partitioning-independent, so trained centroids/codebooks stay
-    bit-identical (pinned by the pretrained-parity tests)."""
-    n_rows = c.count()  # one cheap job; materializes the cache if new
-    have = c.rdd.getNumPartitions()
-    parts = max(1, min(
-        have, (n_rows + _ITER_ROWS_PER_TASK - 1) // _ITER_ROWS_PER_TASK
-    ))
-    return c.coalesce(parts) if parts < have else c
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -657,33 +634,58 @@ def _unit_centroids(dim: int, n_cells: int, seed: str) -> list[list[float]]:
     return out
 
 
-def _probe_cells_udf(centroids: list[list[float]], top: int):
-    """array<int> of the `top` nearest cell ids (best first), vectorized:
-    one Arrow matmul against the centroid matrix replaces n_cells
-    interpreted `dot` folds per row. Tie-break: equal dot → larger cell
-    id first; the column-reversed argsort makes numpy's stable sort
-    prefer the higher original cell index on exact ties. Cell assignment
-    carries no fp-parity obligation — a boundary flip moves a vector
-    between cells (an index/recall detail), the exact re-rank is
-    unaffected."""
-    from pyspark.sql.functions import pandas_udf
-
+def _probe_cells_np(
+    units: np.ndarray, centroids: list[list[float]], top: int
+) -> np.ndarray:
+    """The `top` nearest cell ids of each row of `units` (best first):
+    one matmul against the centroid matrix replaces n_cells interpreted
+    `dot` folds per row. Tie-break: equal dot → larger cell id first;
+    the column-reversed argsort makes numpy's stable sort prefer the
+    higher original cell index on exact ties. The one assignment
+    kernel: Lloyd runs it on the collected training matrix, the IVF-PQ
+    serve step on the collected queries (so the probed cells become a
+    STATIC partition filter on the index table) and `_probe_cells_udf`
+    on each Arrow batch. Serve-side assignment carries no fp-parity
+    obligation — a boundary flip moves a vector between cells (an
+    index/recall detail), the exact re-rank is unaffected."""
     cmat = np.array(centroids)  # (n_cells, dim)
     n_cells = len(centroids)
+    d = units @ cmat.T  # (rows, n_cells)
+    rev = np.argsort(-d[:, ::-1], axis=1, kind="stable")[:, :top]
+    return (n_cells - 1) - rev
+
+
+def _probe_cells_udf(centroids: list[list[float]], top: int):
+    """`_probe_cells_np` as an array<int> pandas UDF, one call per Arrow
+    batch (cell assignment of the index build and of `ivf_topk`)."""
+    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<int>")
     def _probe(units: pd.Series) -> pd.Series:
-        x = np.vstack(units.to_numpy())
-        d = x @ cmat.T  # (rows, n_cells)
-        rev = np.argsort(-d[:, ::-1], axis=1, kind="stable")[:, :top]
-        cells = (n_cells - 1) - rev
+        cells = _probe_cells_np(np.vstack(units.to_numpy()), centroids, top)
         return pd.Series(list(cells.astype("int32")))
 
     return _probe
 
 
+#: Most rows a trainer collects to the driver: 256 MB of dim-64 unit
+#: doubles plus their fixed-point copies. A larger input trains on a
+#: deterministic sample of about this many rows (`_training_matrix`).
+_TRAIN_MAX_ROWS = 1 << 18
+
+#: Each unit component as the exact DECIMAL(38,18) Spark's cast makes of
+#: it, scaled to an integer (|x| ≤ 1, so it fits a BIGINT). The cast
+#: stays in Spark: it reads the double through the JVM's
+#: `Double.toString`, which is not always the shortest repr, so Python's
+#: `Decimal(repr(x))` can round differently.
+_FIXED_UNIT = (
+    "transform(unit, x -> CAST(CAST(x AS DECIMAL(38,18)) "
+    "* 1000000000000000000 AS BIGINT))"
+)
+
+
 def _training_units(
-    candidates: DataFrame, emb_col: str, unit_df: DataFrame | None
+    candidates: DataFrame, emb_col: str, unit_df: DataFrame | None = None
 ) -> DataFrame:
     """The `unit` frame a trainer reads: the caller's pre-normalized
     `unit_df` when given (the build steps pass their candidate unit
@@ -693,70 +695,111 @@ def _training_units(
     return with_unit_vector(_spread(candidates), emb_col).select("unit")
 
 
-def train_ivf_centroids(
-    candidates: DataFrame,
-    n_cells: int = 16,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    dim: int = 64,
-    seed: str = "ivf",
-    unit_df: DataFrame | None = None,
-) -> list[list[float]]:
-    """Spherical-k-means coarse quantizer: Lloyd iterations where the
-    per-cell mean is computed with DECIMAL(38,18)-exact sums (order-
-    independent — the centroids are bit-identical regardless of
-    partitioning), then re-normalized to the unit sphere. Each round is one
-    Spark job whose shuffle is n_cells × dim rows; the collected result is
-    tiny (n_cells × dim floats) and becomes a broadcast literal for the next
-    round. At 100 TB you would train on a deterministic sample (filter on a
-    hash of the id) — the loop shape is identical. Empty cells keep their
-    previous centroid (standard Lloyd degeneracy handling).
+def _training_matrix(
+    units: DataFrame, dim: int, unit_col: str = "unit"
+) -> tuple[np.ndarray, np.ndarray]:
+    """A trainer's one Spark pass: one Arrow collect of the unit vectors
+    as a (rows × dim) double matrix, for assignment, and as their
+    `_FIXED_UNIT` integers, for the exact sums. Nothing is cached, so
+    nothing is left behind. Past `_TRAIN_MAX_ROWS` rows that collect is
+    dropped and the fit runs on a deterministic sample instead: the rows
+    whose unit vector hashes to 0 mod ⌈rows / cap⌉, the same rows under
+    any partitioning. That costs two more passes (the count and the
+    sample), and the dropped collect has still moved up to cap + 1 rows
+    of every partition into one task (CollectLimit's single-partition
+    exchange)."""
+    cols = units.select(F.col(unit_col).alias("unit")).select(
+        "unit", F.expr(_FIXED_UNIT).alias("fixed")
+    )
 
-    ``unit_df`` (r17, guide §5): a caller-owned frame whose `unit` column
-    is the ALREADY-normalized (and typically cached) vectors — the serve
-    paths build exactly this frame anyway, and passing it here removes a
-    second spread+normalize+cache materialization per build. The fold
-    arithmetic is unchanged either way (same expression tree produced
-    the units; the DECIMAL sums are order-independent), so centroids are
-    bit-identical with or without it. When given, the caller owns the
-    cache lifecycle."""
-    own_cache = unit_df is None
-    c = _training_units(candidates, emb_col, unit_df)
-    if own_cache:
-        c = c.cache()
-    c = _iteration_frame(c)
-    centroids = _unit_centroids(dim, n_cells, seed)
-    # dim sums as COLUMNS of one n_cells-group aggregate (not a
-    # posexplode to rows×dim — same DECIMAL-exact order-independent sums,
-    # ~3× less per-iteration work at dim 64); element_at is 1-based
-    sum_cols = [
-        F.sum(F.element_at("unit", i + 1).cast("decimal(38,18)")).alias(f"s{i}")
-        for i in range(dim)
-    ]
-    for _ in range(n_iters):
-        assign = _probe_cells_udf(centroids, top=1)
-        stats = (
-            c.select(
-                F.element_at(assign(F.col("unit")), 1).alias("cell"), "unit"
-            )
-            .groupBy("cell")
-            .agg(*sum_cols, F.count("*").alias("n"))
-            .collect()
+    def collect(df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        t = df.toArrow()
+        x, fixed = (
+            t.column(name).combine_chunks().flatten().to_numpy()
+            .reshape(t.num_rows, dim)
+            for name in ("unit", "fixed")
         )
-        means: dict[int, list[float]] = {
-            r["cell"]: [float(r[f"s{i}"]) / r["n"] for i in range(dim)]
-            for r in stats
-        }
+        return x, fixed
+
+    x, fixed = collect(cols.limit(_TRAIN_MAX_ROWS + 1))
+    if len(x) > _TRAIN_MAX_ROWS:
+        stride = -(-units.count() // _TRAIN_MAX_ROWS)
+        x, fixed = collect(
+            cols.filter(F.pmod(F.xxhash64("unit"), F.lit(stride)) == 0)
+        )
+    return x, fixed
+
+
+def _fixed_means(
+    keys: np.ndarray, fixed: np.ndarray
+) -> dict[int, list[float]]:
+    """Per-key mean of the `fixed` rows, for the keys that occur: the
+    exact integer sum S of each component (split at bit 30 so no int64
+    sum can overflow), then S / 10**18 / n. The first division is one
+    correctly rounded int division, the double of the DECIMAL(38,18)
+    sum, so the means are the `float(decimal_sum) / n` of a Spark
+    `sum(cast(x as decimal(38,18)))` and do not depend on row order."""
+    uniq, inv, counts = np.unique(
+        keys, return_inverse=True, return_counts=True
+    )
+    sums = []
+    for part in (fixed >> 30, fixed & ((1 << 30) - 1)):
+        s = np.zeros((len(uniq), fixed.shape[1]), dtype=np.int64)
+        np.add.at(s, inv, part)
+        sums.append(s.tolist())
+    return {
+        key: [((h << 30) + lo) / 10**18 / n for h, lo in zip(hi_row, lo_row)]
+        for key, n, hi_row, lo_row in zip(
+            uniq.tolist(), counts.tolist(), *sums
+        )
+    }
+
+
+def _fit_ivf_centroids(
+    units: np.ndarray,
+    fixed: np.ndarray,
+    n_cells: int,
+    n_iters: int,
+    dim: int,
+    seed: str,
+) -> list[list[float]]:
+    """`train_ivf_centroids`' Lloyd rounds on a `_training_matrix`: each
+    round assigns every row to its nearest centroid (`_probe_cells_np`),
+    takes each cell's exact mean (`_fixed_means`) and re-normalizes it
+    to the unit sphere."""
+    centroids = _unit_centroids(dim, n_cells, seed)
+    for _ in range(n_iters):
+        cells = _probe_cells_np(units, centroids, top=1)[:, 0]
+        means = _fixed_means(cells, fixed)
         new = []
         for i, old in enumerate(centroids):
             m = means.get(i)
             norm_m = sum(x * x for x in m) ** 0.5 if m else 0.0
             new.append([x / norm_m for x in m] if norm_m > 0 else old)
         centroids = new
-    if own_cache:
-        c.unpersist()
     return centroids
+
+
+def train_ivf_centroids(
+    candidates: DataFrame,
+    n_cells: int = 16,
+    n_iters: int = 3,
+    emb_col: str = "embedding",
+    dim: int = 64,
+    seed: str = "ivf",
+) -> list[list[float]]:
+    """Spherical-k-means coarse quantizer: Lloyd iterations where the
+    per-cell mean is computed from DECIMAL(38,18)-exact sums (order-
+    independent — the centroids are bit-identical regardless of
+    partitioning), then re-normalized to the unit sphere. The unit
+    vectors are collected ONCE (`_training_matrix`: one Spark job up to
+    `_TRAIN_MAX_ROWS` rows, a deterministic hash sample past it) and
+    every round runs on the driver in numpy, so the job count does not
+    grow with `n_iters`; the result is tiny (n_cells × dim floats) and
+    becomes a broadcast literal for the index. Empty cells keep their
+    previous centroid (standard Lloyd degeneracy handling)."""
+    x, fixed = _training_matrix(_training_units(candidates, emb_col), dim)
+    return _fit_ivf_centroids(x, fixed, n_cells, n_iters, dim, seed)
 
 
 def ivf_topk(
@@ -802,15 +845,13 @@ def ivf_topk(
     ivfpq_topk_pretrained)."""
     # ONE spread+normalize+cache per build (r17, guide §5) — the serve
     # path needs this frame anyway (cell assignment + prescore or exact
-    # scoring); training reads the same units through it. Centroids are
-    # bit-identical (same unit expression, order-independent DECIMAL
+    # scoring); training collects the same units from it. Centroids are
+    # bit-identical (same unit expression, order-independent exact
     # sums).
     c = _candidate_units(candidates, id_col, emb_col).cache()
     if centroids is None:
-        centroids = train_ivf_centroids(
-            candidates, n_cells, n_iters, id_col, emb_col, dim,
-            unit_df=c.select(F.col("c_unit").alias("unit")),
-        )
+        x, fixed = _training_matrix(c, dim, "c_unit")
+        centroids = _fit_ivf_centroids(x, fixed, n_cells, n_iters, dim, "ivf")
     c_probe = _probe_cells_udf(centroids, top=n_assign)
     q_probe = _probe_cells_udf(centroids, top=nprobe)
     q = _query_units(queries, id_col, emb_col)
@@ -1012,31 +1053,67 @@ def _pq_init_codebooks(
     return books
 
 
-def _pq_encode_udf(codebooks: list[list[list[float]]]):
-    """array<int> of per-subspace nearest-codeword indices, all subspaces
-    in ONE Arrow pass: slice the (rows × dim) batch per subspace, one
-    matmul against that subspace's (k × d_sub) codebook, L2-argmin via
-    the dot − ‖c‖²/2 identity. Codes are m small ints — the 100 TB
-    artifact is m bytes/vector instead of dim floats (32× at the
-    8×16-code default on 64-dim float32)."""
-    from pyspark.sql.functions import pandas_udf
-
-    m = len(codebooks)
+def _pq_codes_np(
+    units: np.ndarray, codebooks: list[list[list[float]]]
+) -> np.ndarray:
+    """(rows × m) int32 per-subspace nearest-codeword indices: slice the
+    (rows × dim) matrix per subspace, one matmul against that subspace's
+    (k × d_sub) codebook, L2-argmin via the dot − ‖c‖²/2 identity (ties
+    to the lowest code index). The one encode kernel: Lloyd runs it on
+    the collected training matrix, `_pq_encode_udf` on each Arrow batch.
+    Codes are m small ints — the 100 TB artifact is m bytes/vector
+    instead of dim floats (32× at the 8×16-code default on 64-dim
+    float32)."""
     d_sub = len(codebooks[0][0])
-    mats = [np.array(b) for b in codebooks]  # m × (k × d_sub)
-    halves = [0.5 * (mat * mat).sum(axis=1) for mat in mats]
+    codes = np.empty((len(units), len(codebooks)), dtype="int32")
+    for s, book in enumerate(codebooks):
+        mat = np.array(book)  # (k × d_sub)
+        sub = units[:, s * d_sub : (s + 1) * d_sub]
+        scores = sub @ mat.T - 0.5 * (mat * mat).sum(axis=1)
+        codes[:, s] = scores.argmax(axis=1)
+    return codes
+
+
+def _pq_encode_udf(codebooks: list[list[list[float]]]):
+    """`_pq_codes_np` as an array<int> pandas UDF: all subspaces in ONE
+    Arrow pass."""
+    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<int>")
     def _encode(units: pd.Series) -> pd.Series:
-        x = np.vstack(units.to_numpy())
-        codes = np.empty((len(x), m), dtype="int32")
-        for s in range(m):
-            sub = x[:, s * d_sub : (s + 1) * d_sub]
-            scores = sub @ mats[s].T - halves[s]
-            codes[:, s] = scores.argmax(axis=1)
+        codes = _pq_codes_np(np.vstack(units.to_numpy()), codebooks)
         return pd.Series(list(codes))
 
     return _encode
+
+
+def _fit_pq_codebooks(
+    units: np.ndarray,
+    fixed: np.ndarray,
+    m: int,
+    k_codes: int,
+    n_iters: int,
+    dim: int,
+    seed: str,
+) -> list[list[list[float]]]:
+    """`train_pq_codebooks`' Lloyd rounds on a `_training_matrix`: each
+    round encodes every row (`_pq_codes_np`) and moves each codeword to
+    the exact mean of its subvectors (`_fixed_means`)."""
+    if dim % m:
+        raise ValueError(f"dim ({dim}) must divide into m ({m}) subspaces")
+    d_sub = dim // m
+    books = _pq_init_codebooks(dim, m, k_codes, seed)
+    for _ in range(n_iters):
+        codes = _pq_codes_np(units, books)
+        means = [
+            _fixed_means(codes[:, s], fixed[:, s * d_sub : (s + 1) * d_sub])
+            for s in range(m)
+        ]
+        books = [
+            [means[s].get(c, books[s][c]) for c in range(k_codes)]
+            for s in range(m)
+        ]
+    return books
 
 
 def train_pq_codebooks(
@@ -1047,68 +1124,17 @@ def train_pq_codebooks(
     emb_col: str = "embedding",
     dim: int = 64,
     seed: str = "pq",
-    unit_df: DataFrame | None = None,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks (Jégou et al. 2011): split the
-    UNIT vector into `m` subspaces and k-means each independently. Lloyd
-    iterations mirror `train_ivf_centroids`' determinism contract: per-
-    (subspace, code) sums are DECIMAL(38,18)-exact (order-independent →
-    bit-identical codebooks for any partitioning), assignment is one
-    Arrow pass, and each round's shuffle carries rows × m skinny
-    (subspace, code, subvector) rows — the same bytes as one corpus
-    scan. Empty codes keep their previous codeword (standard Lloyd
-    degeneracy handling). At 100 TB train on a deterministic hash-sample;
-    the loop shape is identical.
-
-    ``unit_df``: caller-owned pre-normalized `unit` frame — see
-    `train_ivf_centroids`; codebooks are bit-identical either way."""
-    if dim % m:
-        raise ValueError(f"dim ({dim}) must divide into m ({m}) subspaces")
-    d_sub = dim // m
-    own_cache = unit_df is None
-    u = _training_units(candidates, emb_col, unit_df)
-    if own_cache:
-        u = u.cache()
-    u = _iteration_frame(u)
-    books = _pq_init_codebooks(dim, m, k_codes, seed)
-    sum_cols = [
-        F.sum(F.element_at("sub", i + 1).cast("decimal(38,18)")).alias(f"s{i}")
-        for i in range(d_sub)
-    ]
-    for _ in range(n_iters):
-        enc = _pq_encode_udf(books)
-        subs = (
-            u.select(F.posexplode(enc(F.col("unit"))).alias("subspace", "code"),
-                     F.col("unit"))
-            .select(
-                "subspace",
-                "code",
-                F.slice(
-                    "unit",
-                    F.col("subspace") * d_sub + 1,
-                    d_sub,
-                ).alias("sub"),
-            )
-            .groupBy("subspace", "code")
-            .agg(*sum_cols, F.count("*").alias("n"))
-            .collect()
-        )
-        means: dict[tuple[int, int], list[float]] = {
-            (r["subspace"], r["code"]): [
-                float(r[f"s{i}"]) / r["n"] for i in range(d_sub)
-            ]
-            for r in subs
-        }
-        books = [
-            [
-                means.get((s, c), books[s][c])
-                for c in range(k_codes)
-            ]
-            for s in range(m)
-        ]
-    if own_cache:
-        u.unpersist()
-    return books
+    UNIT vector into `m` subspaces and k-means each independently. The
+    training mirrors `train_ivf_centroids`: one collect of the unit
+    vectors (a deterministic hash sample past `_TRAIN_MAX_ROWS` rows),
+    then Lloyd on the driver with per-(subspace, code) DECIMAL(38,18)-
+    exact sums (order-independent → bit-identical codebooks for any
+    partitioning). Empty codes keep their previous codeword (standard
+    Lloyd degeneracy handling)."""
+    x, fixed = _training_matrix(_training_units(candidates, emb_col), dim)
+    return _fit_pq_codebooks(x, fixed, m, k_codes, n_iters, dim, seed)
 
 
 def _adc_scores(
@@ -1186,16 +1212,14 @@ def pq_topk(
     one-off lookups. Deterministic end-to-end (md5 init, DECIMAL Lloyd,
     argmax ties to the lowest code index)."""
     # ONE spread+normalize+cache per build (r17, guide §5): the serve
-    # path needs this frame anyway (the encode pass), and training reads
-    # the same units through it instead of materializing its own copy —
-    # codebooks bit-identical (same unit expression, order-independent
-    # DECIMAL sums).
+    # path needs this frame anyway (the encode pass), and training
+    # collects the same units from it instead of normalizing its own
+    # copy — codebooks bit-identical (same unit expression, order-
+    # independent exact sums).
     c = _candidate_units(candidates, id_col, emb_col).cache()
     if codebooks is None:
-        codebooks = train_pq_codebooks(
-            candidates, m, k_codes, n_iters, emb_col, dim,
-            unit_df=c.select(F.col("c_unit").alias("unit")),
-        )
+        x, fixed = _training_matrix(c, dim, "c_unit")
+        codebooks = _fit_pq_codebooks(x, fixed, m, k_codes, n_iters, dim, "pq")
     # supplied codebooks are the shape authority (m/k_codes params are
     # training knobs only) — see _pq_shape
     _pq_shape(codebooks, dim)
@@ -1219,7 +1243,6 @@ def pq_topk(
 
 
 def _train_ivfpq(
-    candidates: DataFrame,
     c: DataFrame,
     centroids: list[list[float]] | None,
     codebooks: list[list[list[float]]] | None,
@@ -1227,57 +1250,22 @@ def _train_ivfpq(
     m: int,
     k_codes: int,
     n_iters: int,
-    id_col: str,
-    emb_col: str,
     dim: int,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """IVF-PQ build, training half: train whichever of the coarse
-    quantizer and the PQ codebooks is not supplied, both from the one
-    cached candidate unit frame `c`. The two trainings are INDEPENDENT
-    aggregate loops over that shared cache, so they run as concurrent
-    driver-submitted jobs: wall = max(ivf, pq) instead of the sum. Each
-    training's per-iteration arithmetic is untouched — same unit
-    expression, same order-independent DECIMAL sums, same sequential
-    iteration order within each trainer — so centroids AND codebooks are
-    bit-identical to the serial form (pinned by the pretrained-parity and
-    recall tests)."""
+    """IVF-PQ build, training half: fit whichever of the coarse
+    quantizer and the PQ codebooks is not supplied, one after the other
+    on ONE `_training_matrix` collect of the cached candidate unit frame
+    `c`. Each fit is the arithmetic of its standalone trainer, so
+    centroids AND codebooks are bit-identical to `train_ivf_centroids` /
+    `train_pq_codebooks` on the same candidates (pinned by the
+    pretrained-parity and recall tests)."""
     if centroids is not None and codebooks is not None:
         return centroids, codebooks
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # the trainers' jobs carry the caller's job group, description and
-    # tags (so cancelJobGroup reaches them); a plain pool thread has none.
-    # With pinned threads off it hands the session back: no wrapper.
-    session = candidates.sparkSession
-    inherit = inheritable_thread_target(session)
-    if inherit is session:
-        inherit = lambda f: f  # noqa: E731
-    unit = c.select(F.col("c_unit").alias("unit"))
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_cent = (
-            pool.submit(
-                inherit(train_ivf_centroids),
-                candidates, n_cells, n_iters,
-                id_col, emb_col, dim, unit_df=unit,
-            )
-            if centroids is None
-            else None
-        )
-        fut_books = (
-            pool.submit(
-                inherit(train_pq_codebooks),
-                candidates, m, k_codes, n_iters, emb_col, dim,
-                unit_df=unit,
-            )
-            if codebooks is None
-            else None
-        )
-        if fut_cent is not None:
-            centroids = fut_cent.result()
-        if fut_books is not None:
-            codebooks = fut_books.result()
+    x, fixed = _training_matrix(c, dim, "c_unit")
+    if centroids is None:
+        centroids = _fit_ivf_centroids(x, fixed, n_cells, n_iters, dim, "ivf")
+    if codebooks is None:
+        codebooks = _fit_pq_codebooks(x, fixed, m, k_codes, n_iters, dim, "pq")
     return centroids, codebooks
 
 
@@ -1378,18 +1366,17 @@ def ivfpq_topk(
     exact cosine over the survivors' vectors only.
 
     serve(build(candidates)): the build is `write_ivfpq_index`'s — one
-    cached unit frame read by both trainers, then the (neighbor_id,
-    codes, cell) index rows — and the serve is `ivfpq_topk_pretrained`'s
-    (`_ivfpq_serve`: driver-side query probe, broadcast cell join, ADC,
-    exact re-rank), so the two return the same rows under the same
-    artifacts. Both trainings inherit the DECIMAL-exact / md5-init
-    determinism of their standalone forms, so results are bit-stable
-    across partitionings. Pass pre-trained `centroids`/`codebooks` for
-    the train-once/serve-many lifecycle."""
+    cached unit frame, collected once for both fits, then the
+    (neighbor_id, codes, cell) index rows — and the serve is
+    `ivfpq_topk_pretrained`'s (`_ivfpq_serve`: driver-side query probe,
+    broadcast cell join, ADC, exact re-rank), so the two return the same
+    rows under the same artifacts. Both trainings inherit the
+    DECIMAL-exact / md5-init determinism of their standalone forms, so
+    results are bit-stable across partitionings. Pass pre-trained
+    `centroids`/`codebooks` for the train-once/serve-many lifecycle."""
     c = _candidate_units(candidates, id_col, emb_col).cache()
     centroids, codebooks = _train_ivfpq(
-        candidates, c, centroids, codebooks, n_cells, m, k_codes, n_iters,
-        id_col, emb_col, dim,
+        c, centroids, codebooks, n_cells, m, k_codes, n_iters, dim
     )
     # supplied codebooks are the shape authority (m/k_codes params are
     # training knobs only) — see _pq_shape
@@ -1430,23 +1417,6 @@ def pq_codebooks_from_json(payload: str) -> list[list[list[float]]]:
     return [[[float(x) for x in cw] for cw in book] for book in obj["codebooks"]]
 
 
-def _probe_cells_np(
-    units: np.ndarray, centroids: list[list[float]], top: int
-) -> np.ndarray:
-    """Driver-side mirror of `_probe_cells_udf`'s math (same column-
-    reversed stable argsort → identical tie-breaks) for the |Q|-small
-    query side of IVF-PQ serving: with the queries already collected
-    for the ADC tables, probing them in numpy avoids a whole Spark job
-    and lets the probed cells become a STATIC partition filter on the
-    index table (cells known at plan time → partition pruning, no DPP
-    machinery needed)."""
-    cmat = np.array(centroids)
-    n_cells = len(centroids)
-    d = units @ cmat.T
-    rev = np.argsort(-d[:, ::-1], axis=1, kind="stable")[:, :top]
-    return (n_cells - 1) - rev
-
-
 def write_ivfpq_index(
     candidates: DataFrame,
     table: str,
@@ -1464,8 +1434,8 @@ def write_ivfpq_index(
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Materialize the IVF-PQ candidate index as a CELL-PARTITIONED
     catalog table — persist(build(candidates)), the build `ivfpq_topk`
-    runs inline on every call: one cached unit frame
-    read by both trainers (`_train_ivfpq`), then the `_ivfpq_index` rows.
+    runs inline on every call: one cached unit frame, collected once
+    for both fits (`_train_ivfpq`), then the `_ivfpq_index` rows.
 
     Each row is (neighbor_id, codes, cell): the m-byte PQ code plus the
     coarse cell, written `partitionBy("cell")` so a query's nprobe cells
@@ -1486,8 +1456,7 @@ def write_ivfpq_index(
     c = _candidate_units(candidates, id_col, emb_col).cache()
     try:
         centroids, codebooks = _train_ivfpq(
-            candidates, c, centroids, codebooks, n_cells, m, k_codes,
-            n_iters, id_col, emb_col, dim,
+            c, centroids, codebooks, n_cells, m, k_codes, n_iters, dim
         )
         _pq_shape(codebooks, dim)
         _overwrite_index_table(
@@ -1673,9 +1642,11 @@ def train_sq8_bounds(
     d_sub). min/max are exact order-free folds, so unlike k-means there is
     no iteration and no tie-break discipline needed: any partitioning of
     any cluster trains bit-identical bounds in one aggregation pass.
-    Returns [lo_list, hi_list]. ``unit_df``: caller-owned pre-normalized
-    `unit` frame — see `train_ivf_centroids`; min/max are order-free, so
-    bounds are bit-identical either way."""
+    Returns [lo_list, hi_list]. ``unit_df``: a caller-owned frame whose
+    `unit` column holds the already-normalized (typically cached)
+    vectors — `_sq8_build` passes its candidate unit frame instead of a
+    second normalize pass; min/max are order-free, so bounds are
+    bit-identical either way. When given, the caller owns the cache."""
     c = _training_units(candidates, emb_col, unit_df)
     u = F.col("unit")
     aggs = []

@@ -2757,9 +2757,9 @@ def test_ivfpq_ann_recall_on_testdata(spark):
 
 
 def test_ivfpq_training_jobs_keep_the_callers_job_group(spark):
-    """ivfpq_topk trains its centroids and codebooks on two pool threads;
-    their jobs must carry the caller's job group, or cancelJobGroup
-    cannot reach them."""
+    """ivfpq_topk's build (the training collect, the cache, the index
+    encode) must run its jobs under the caller's job group, or
+    cancelJobGroup cannot reach them."""
     import os
 
     sf_dir = "/root/testdata/sf0.001"
@@ -2781,6 +2781,85 @@ def test_ivfpq_training_jobs_keep_the_callers_job_group(spark):
     assert rows
     assert tracker.getJobIdsForGroup("ivfpq-build")
     assert set(tracker.getJobIdsForGroup(None)) - untagged == set()
+
+
+def _trainers(sim):
+    """Both k-means trainers on the `vectors` fixture's 8-dim shape."""
+    return {
+        "ivf": lambda df, n_iters=2: sim.train_ivf_centroids(
+            df, n_cells=4, n_iters=n_iters, dim=8
+        ),
+        "pq": lambda df, n_iters=2: sim.train_pq_codebooks(
+            df, m=4, k_codes=8, n_iters=n_iters, dim=8
+        ),
+    }
+
+
+def test_trainers_leave_no_cache_behind(spark, vectors):
+    """A standalone training caches nothing, so it leaves nothing in the
+    session's cache manager."""
+    from mempool_dumpster_spark.ml import similarity as sim
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name, train in _trainers(sim).items():
+        spark.catalog.clearCache()
+        assert train(vectors)
+        assert cache.isEmpty(), f"{name} training left a cached frame"
+
+
+def test_training_jobs_do_not_grow_with_iterations(spark, vectors):
+    """Training collects its unit vectors once and runs every Lloyd round
+    on the driver: a trainer runs as many Spark jobs at n_iters=5 as at
+    n_iters=1."""
+    from mempool_dumpster_spark.ml import similarity as sim
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(train, n_iters, group):
+        sc.setJobGroup(group, group)
+        try:
+            train(vectors, n_iters=n_iters)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    for name, train in _trainers(sim).items():
+        one = jobs(train, 1, f"train-{name}-1")
+        five = jobs(train, 5, f"train-{name}-5")
+        assert one == five, f"{name}: {one} jobs at n_iters=1, {five} at 5"
+
+
+def test_training_sample_cap(spark, vectors, monkeypatch):
+    """Past `_TRAIN_MAX_ROWS` rows a trainer fits on a hash sample of about
+    that many rows, the same sample under any partitioning; at or above
+    the input size the cap changes nothing."""
+    from mempool_dumpster_spark.ml import similarity as sim
+
+    n_rows = vectors.count()
+    full = {name: train(vectors) for name, train in _trainers(sim).items()}
+    fitted = []
+    collect = sim._training_matrix
+
+    def spy(*args, **kwargs):
+        x, fixed = collect(*args, **kwargs)
+        fitted.append(len(x))
+        return x, fixed
+
+    monkeypatch.setattr(sim, "_training_matrix", spy)
+    monkeypatch.setattr(sim, "_TRAIN_MAX_ROWS", n_rows)
+    for name, train in _trainers(sim).items():
+        assert train(vectors) == full[name]
+    assert fitted == [n_rows, n_rows]
+
+    cap = n_rows // 4
+    monkeypatch.setattr(sim, "_TRAIN_MAX_ROWS", cap)
+    fitted.clear()
+    for name, train in _trainers(sim).items():
+        assert train(vectors) == train(vectors.repartition(7)), name
+    assert len(fitted) == 4
+    assert all(0 < n <= 2 * cap for n in fitted), fitted
 
 
 def test_pq_codebook_roundtrip_and_reuse(spark, vectors):
